@@ -8,9 +8,25 @@ import org.apache.spark.sql.SparkSession
   * the timed suite and is STATIC, so it must precede session creation).
   */
 object GraftSession {
+
+  /** The fork-free `file://` filesystem (graft.io.LocalFs) for both Hadoop
+    * APIs: `FileSystem` (sink part files, `_temporary`, `_SUCCESS`, state
+    * deltas) and `FileContext` (the streaming offset and commit logs).
+    * Stock Hadoop without libhadoop forks `chmod`/`readlink` per file:
+    * one perfbench ingest_rollup run started 5,856 processes with the
+    * stock classes and 11 with these, none of them for a file. Only the
+    * `file` scheme changes. Test sessions take the same map. Set before
+    * the session exists: the JVM-wide FileSystem cache keeps whichever
+    * `file` class it saw first.
+    */
+  val localFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.ForkFreeLocalFs].getName)
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(localFs)
       .config("spark.sql.shuffle.partitions", cpus)
       // let AQE size shuffles by the DATA, not the core count: partitions
       // can only be coalesced DOWN from the initial number, so a fixed 32

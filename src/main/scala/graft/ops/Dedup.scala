@@ -459,18 +459,21 @@ object Dedup {
     // the set identity all come out of a single pass; the exceptAll join
     // is gone at every scale. Set equality via fingerprint: both sets are
     // DISTINCT canonical (a < b) edge lists, so equality ⇔ equal counts +
-    // equal order-insensitive content hash. Two independent 64-bit
-    // xxhash64 folds (column orders swapped ⇒ different mixes) XOR-reduced
-    // give a 128-bit fingerprint: a false "converged" needs both folds to
-    // collide at equal counts — P ≈ 2⁻¹²⁸ per round, far below any
-    // hardware-error floor (DedupSpec pins fingerprint convergence ==
+    // equal order-insensitive content hash. Two 64-bit xxhash64 folds,
+    // XOR-reduced, give a 128-bit fingerprint. The second fold hashes a
+    // leading constant first, which makes it the same row hash under a
+    // different seed — independent of the first. (Swapping the column
+    // order instead gives two folds of one seed over the same values,
+    // which are not independent.) A false "converged" then needs both
+    // folds to collide at equal counts — P ≈ 2⁻¹²⁸ per round, far below
+    // any hardware-error floor (DedupSpec pins fingerprint convergence ==
     // exceptAll convergence round-for-round on path/clique/random/
     // adversarial shapes).
     def materialize(df: DataFrame): (DataFrame, Long, Long, Long) = {
       val ck = df.localCheckpoint(false) // lazy: first action materializes
       val r = ck.agg(count(lit(1)),
         expr("bit_xor(xxhash64(a, b))"),
-        expr("bit_xor(xxhash64(b, a))")).head()
+        expr("bit_xor(xxhash64(1L, a, b))")).head()
       val n = r.getLong(0)
       val f1 = if (r.isNullAt(1)) 0L else r.getLong(1)
       val f2 = if (r.isNullAt(2)) 0L else r.getLong(2)

@@ -105,6 +105,9 @@ object Graph {
       else CacheRegistry.persist(
         e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
           .distinct())
+    // every node starts at Scale. `uniformRank` is the one rank all nodes
+    // share while that holds (the start only): the round body's fast path
+    var uniformRank: Option[Long] = Some(Scale)
     var rank = nodes.withColumn("rank", lit(Scale))
     // in tol mode each round's result is already persisted+materialized
     // by the delta action — reuse it as next round's prev instead of
@@ -120,25 +123,27 @@ object Graph {
       // cross an integer boundary and flip the floor, breaking the
       // bit-exact oracle contract
       //
-      // ROUND 1 (r17, guide §2.4 remove shuffles outright): the start is
-      // UNIFORM — every node's rank is the constant Scale, and every
-      // edeg.src is a node by construction — so the rank join is an
-      // identity enrichment and round 1's contribution is a pure
-      // projection of the static edge table: no rank exchange, no join,
-      // identical integers (div(Scale·d‰, 1000·outdeg) row for row). At
-      // any scale this deletes one full co-partitioned join pass over the
-      // edge set. Rounds 2+ keep the node-keyed join (ranks are no longer
-      // constant).
-      val contrib = (if (rounds == 1)
-        edeg.select(col("dst").as("node"),
-          call_function("div", lit(Scale * dampingPermille),
-            lit(1000L) * col("outdeg")).as("c"))
-      else edeg
-        .join(prev.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          call_function("div", col("rank") * lit(dampingPermille),
-            lit(1000L) * col("outdeg")).as("c")))
-        .groupBy("node").agg(sum(col("c")).as("in_mass"))
+      // UNIFORM RANKS (r17, guide §2.4 remove shuffles outright): while
+      // every node's rank is the one constant `uniformRank` — and every
+      // edeg.src is a node by construction — the rank join is an
+      // identity enrichment and the contribution is a pure projection of
+      // the static edge table: no rank exchange, no join, identical
+      // integers (div(r·d‰, 1000·outdeg) row for row). At any scale this
+      // deletes one full co-partitioned join pass over the edge set. The
+      // gate is the start value itself, not the round number, so a
+      // non-uniform start can never take this path.
+      val contrib = (uniformRank match {
+        case Some(r) =>
+          edeg.select(col("dst").as("node"),
+            call_function("div", lit(r * dampingPermille),
+              lit(1000L) * col("outdeg")).as("c"))
+        case None =>
+          edeg.join(prev.withColumnRenamed("node", "src"), "src")
+            .select(col("dst").as("node"),
+              call_function("div", col("rank") * lit(dampingPermille),
+                lit(1000L) * col("outdeg")).as("c"))
+      }).groupBy("node").agg(sum(col("c")).as("in_mass"))
+      uniformRank = None
       // symmetric graphs: contrib already has one row per node (see
       // `nodes` above), so the backfill join is skipped — base + in_mass
       // directly. General graphs keep the left-join for dangling nodes.

@@ -15,6 +15,9 @@ object TestSpark {
       // same extensions as GraftSession: specs must see the harness's
       // optimizer (plan-shape pins would otherwise test a different engine)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // same local filesystem as GraftSession: every file a spec writes,
+      // checkpoints included, goes through the harness's FS classes
+      .config(GraftSession.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
