@@ -19,19 +19,19 @@ object Profile {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val n = df.count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[profile] $name%-28s $sec%8.2fs rows=$n")
-      if (sys.env.contains("PROFILE_EXPLAIN")) fn(spark, sfDir).explain("formatted")
+      if (sys.env.contains("PROFILE_EXPLAIN")) df.explain("formatted")
       // POST-EXECUTION plan: AQE's final stages (join strategy switches,
       // coalesced reads, reused exchanges/stages) only exist after the
       // action — explain() before execution shows isFinalPlan=false trees
       if (sys.env.contains("PROFILE_EXECUTED")) {
         // drive THIS queryExecution's plan (a .count() would execute a
         // separate aggregate query and leave this AQE tree un-finalized)
-        val qe = fn(spark, sfDir).queryExecution
+        val qe = df.queryExecution
         qe.executedPlan.execute().count()
         println(qe.executedPlan.toString)
       }

@@ -277,11 +277,12 @@ object Rollup {
     * registerStatsLadder on EVERY invocation (clear()-resilience), and the
     * full derivation — three optimized-plan traces + three parquet
     * re-analyses + signature probes — measured ~0.31 s/call at sf0.1
-    * (tools.NavOverhead), the bulk of the nav family's fixed cost. When all
-    * rung keys are still live the re-arm is a map lookup. build/refresh
-    * invalidate (store contents changed ⇒ the cached LogicalRelation's file
-    * list is stale); RollupNavigation.clear() empties the registration
-    * table, so isLive goes false and the next call re-derives. Keeping the
+    * (SCALE.md r14 nav-overhead attribution), the bulk of the nav
+    * family's fixed cost. When all rung keys are still live the re-arm
+    * is a map lookup. build/refresh invalidate (store contents changed
+    * ⇒ the cached LogicalRelation's file list is stale);
+    * RollupNavigation.clear() empties the registration table, so isLive
+    * goes false and the next call re-derives. Keeping the
     * FIRST registration's raw-store signature is also the conservative
     * choice: a raw store that changed after the ladder was built now fails
     * the plan-time freshness probe and falls back to the raw scan, instead

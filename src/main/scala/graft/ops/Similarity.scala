@@ -640,8 +640,8 @@ object Similarity {
             // seeds: with spreadSeeds (production) the k2eff lowest
             // (md5Long(id), id) sample members — the kmeansTrainSpread
             // posture, per cell: lowest-ID fine seeds inherit the coarse
-            // level's clustered-data degeneracy (Ivf2Diag measured one
-            // fine cell holding 56k of a 104k-member coarse cell).
+            // level's clustered-data degeneracy (a fine-cell census measured
+            // one fine cell holding 56k of a 104k-member coarse cell).
             // Without it, the k2eff lowest ids (the Lloyd-replication
             // contract the differential spec pins). Either way the chosen
             // seeds are re-sorted by id: fine-cell identity IS the seed
@@ -1416,7 +1416,7 @@ object Similarity {
     * concentrate in one region (replicated fixtures, append-ordered
     * ingests), every seed lands there and two Lloyd rounds cannot undo
     * it — the 100× fixture trained ONE coarse cell holding 104k of 200k
-    * vectors (Ivf2Diag), which cascaded into a 15-billion-candidate
+    * vectors (SCALE.md r15 fine-cell census), which cascaded into a 15-billion-candidate
     * scoring budget. md5-order seeds land ∝ data density (the standard
     * random-init posture, made engine-reproducible), and the DuckDB
     * oracle replays the exact seed set via the same md5 expression.

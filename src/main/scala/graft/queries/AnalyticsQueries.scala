@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import graft.io.Artifacts
 import graft.ops.Sampling
 import graft.sources.Tables
 
@@ -1067,20 +1069,44 @@ object AnalyticsQueries {
       |    AS score
       |FROM w GROUP BY 1""".stripMargin
 
-  /** Pin a strictly increasing mtime on every file the latest sequential
-    * write just landed in `dir`, so the file source's mtime ordering is
-    * deterministic even on filesystems with coarse (e.g. 1 s) timestamp
-    * granularity — replaces the Thread.sleep(5) that relied on sub-second
-    * mtimes. `seen` tracks already-pinned paths across writes; `batch`
-    * spaces them 60 s apart (well inside the source's maxFileAge window).
+  /** A JSON-lines topic in `dir` that the file source replays in write
+    * order: each `append` lands its frame as ONE file and pins a strictly
+    * increasing mtime on it, so the mtime ordering is deterministic even
+    * on filesystems with coarse (e.g. 1 s) timestamp granularity.
+    * Appends are spaced 60 s apart (well inside the source's maxFileAge
+    * window).
     */
-  private def pinLandingOrder(dir: String, seen: scala.collection.mutable.Set[String],
-                              base: Long, batch: Int): Unit = {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-    files.filter(f => f.isFile && !seen.contains(f.getPath)).foreach { f =>
-      require(f.setLastModified(base + batch * 60000L),
-        s"pinLandingOrder: cannot set mtime on ${f.getPath}")
-      seen.add(f.getPath)
+  private final class OrderedTopic(dir: String) {
+    private val seen = scala.collection.mutable.Set.empty[String]
+    private val base = System.currentTimeMillis() - 600000L
+    private var batch = 0
+
+    def append(df: DataFrame): Unit = {
+      df.select(to_json(struct(df.columns.toSeq.map(col): _*)).as("value"))
+        .coalesce(1).write.mode("append").text(dir)
+      val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      files.filter(f => f.isFile && !seen.contains(f.getPath)).foreach { f =>
+        require(f.setLastModified(base + batch * 60000L),
+          s"OrderedTopic: cannot set mtime on ${f.getPath}")
+        seen.add(f.getPath)
+      }
+      batch += 1
+    }
+
+    /** Append `ev` as four `t_us`-ranged slices, oldest first (the
+      * per-key time order a user-keyed Kafka topic guarantees); returns
+      * the topic's max `t_us`. */
+    def appendTimeSlices(ev: DataFrame): Long = {
+      val r = ev.agg(min("t_us"), max("t_us")).head()
+      val (lo, hi) = (r.getLong(0), r.getLong(1))
+      val step = math.max(1L, (hi - lo) / 4 + 1)
+      (0 until 4).foreach { i =>
+        append(ev.filter(col("t_us") >= lo + i * step &&
+            col("t_us") < lo + (i + 1) * step || lit(i == 3) &&
+            col("t_us") >= lo + 4 * step)
+          .orderBy("t_us"))
+      }
+      hi
     }
   }
 
@@ -1092,32 +1118,19 @@ object AnalyticsQueries {
     * emits during the second. Sentinel keys are negative and filtered on
     * read; their own outer rows die with the state at query stop.
     */
-  private val streamLeftJoinPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedLeftOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val out = streamLeftJoinPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_loj_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_loj", dir, OutputMode.Append) { src =>
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("purchase", "signup"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"))
       val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val mtimeBase = System.currentTimeMillis() - 600000L
-      ev.select(to_json(struct(col("user_id"), col("event_type"),
-          col("ts_us"))).as("value"))
-        .coalesce(1).write.mode("append").text(src)
-      pinLandingOrder(src, seen, mtimeBase, 0)
-      Seq(30L, 60L).zipWithIndex.foreach { case (d, i) =>
+      val topic = new OrderedTopic(src)
+      topic.append(ev)
+      Seq(30L, 60L).foreach { d =>
         val t = maxUs + d * 86400000000L
-        s.createDataFrame(Seq(
-            (-1L, "purchase", t), (-2L, "signup", t)))
-          .toDF("user_id", "event_type", "ts_us")
-          .select(to_json(struct(col("user_id"), col("event_type"),
-            col("ts_us"))).as("value"))
-          .coalesce(1).write.mode("append").text(src)
-        pinLandingOrder(src, seen, mtimeBase, i + 1)
+        topic.append(s.createDataFrame(Seq((-1L, "purchase", t), (-2L, "signup", t)))
+          .toDF("user_id", "event_type", "ts_us"))
       }
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, event_type STRING, ts_us BIGINT")
@@ -1127,15 +1140,12 @@ object AnalyticsQueries {
           .filter(col("event_type") === t)
           .select(col("user_id").as(key),
             timestamp_micros(col("ts_us")).as(ts))
-      val joined = graft.streaming.StreamingJoins.intervalJoinLeftOuter(
+      graft.streaming.StreamingJoins.intervalJoinLeftOuter(
         side("purchase", "u", "pts"), side("signup", "su", "sts"),
         keyL = "u", keyR = "su", tsL = "pts", tsR = "sts",
         windowSec = 3600L, lateness = "1 hour")
         .select(col("u"), col("pts"), col("sts"))
-      graft.streaming.Landing.availableNow(joined, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
-    })
+    }
     s.read.parquet(out).filter(col("u") >= 0L)
   }
 
@@ -1143,13 +1153,9 @@ object AnalyticsQueries {
     * register) max-rho in Update mode; rho is monotone non-decreasing per
     * (day, register) so the read side compacts with max.
     */
-  private val streamWauPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedDayRegisters(s: SparkSession, dir: String): DataFrame = {
-    val out = streamWauPaths.getOrElseUpdate(dir, {
+    val out = Artifacts.drain("stream_wau", dir, OutputMode.Update) { src =>
       import graft.functions.{Hashing, Hll}
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_wau_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
       Tables.events(s, dir)
         .select(to_json(struct(col("user_id"),
           unix_micros(col("ts")).as("ts_us"))).as("value"))
@@ -1159,14 +1165,11 @@ object AnalyticsQueries {
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
       val h = Hashing.md5Long(col("user_id").cast("string"))
-      val regs = decoded
+      decoded
         .select(expr("ts_us div 86400000000").as("day"),
           Hll.regIdx(h).as("reg_idx"), Hll.rho(h).as("rho"))
         .groupBy("day", "reg_idx").agg(max(col("rho")).as("rho"))
-      graft.streaming.Landing.availableNow(regs, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("day", "reg_idx")
       .agg(max(col("rho")).as("rho"))
   }
@@ -1182,15 +1185,10 @@ object AnalyticsQueries {
     * superset guarantee for that day.
     */
   private val TrendingHeavyCap = 48
-  private val streamTrendHeavyPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def topicCol: Column =
     concat(col("event_type"), lit("#"), expr("CAST(k div 10 AS STRING)"))
   private def streamedDayHeavyCandidates(s: SparkSession, dir: String): DataFrame = {
-    val out = streamTrendHeavyPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_trendheavy_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_trendheavy", dir, OutputMode.Update) { src =>
       Tables.events(s, dir)
         .select(to_json(struct(col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("props"))).as("value"))
@@ -1199,7 +1197,7 @@ object AnalyticsQueries {
         "event_type STRING, ts_us BIGINT, props STRING")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val sk = decoded
+      decoded
         .withColumn("k", expr("from_json(props, 'k BIGINT').k"))
         .filter(col("k").isNotNull)
         .select(topicCol.as("topic"), expr("ts_us div 86400000000").as("day"))
@@ -1207,10 +1205,7 @@ object AnalyticsQueries {
         .agg(graft.functions.MisraGries.candidates(col("topic"),
             TrendingHeavyCap).as("cands"),
           count(lit(1)).as("total"))
-      graft.streaming.Landing.availableNow(sk, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("day").orderBy(col("total").desc)
     s.read.parquet(out)
@@ -1224,13 +1219,9 @@ object AnalyticsQueries {
     * read, merged, and dynamically overwritten (see UpsertSink scaladoc
     * for the scale contract). Returns the state path.
     */
-  private val streamUpsertPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedUpsertState(s: SparkSession, dir: String): String =
-    streamUpsertPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_upsert_").toString
-      val src = s"$root/src"; val state = s"$root/state"; val ckpt = s"$root/ckpt"
+    Artifacts.land("stream_upsert", dir) { root =>
+      val src = s"$root/src"
       Tables.events(s, dir)
         .select(to_json(struct(col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("event_type"),
@@ -1242,10 +1233,9 @@ object AnalyticsQueries {
           "cents BIGINT, event_id BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      graft.streaming.UpsertSink.availableNow(decoded, state, ckpt,
-        keyCol = "user_id", orderCols = Seq("ts_us", "event_id"))
-      state
-    })
+      graft.streaming.UpsertSink.availableNow(decoded, s"$root/state",
+        s"$root/ckpt", keyCol = "user_id", orderCols = Seq("ts_us", "event_id"))
+    } + "/state"
 
   /** Landing for q_t24_streaming_session_native: Spark's built-in
     * `session_window` as a STATEFUL STREAMING aggregation (merging
@@ -1257,44 +1247,30 @@ object AnalyticsQueries {
     * sentinel discipline. Sentinel sessions are negative-keyed and
     * filtered on read.
     */
-  private val streamSessionNativePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedNativeSessions(s: SparkSession, dir: String): DataFrame = {
-    val out = streamSessionNativePaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_sessnat_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_sessnat", dir, OutputMode.Append) { src =>
       val ev = Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
       val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val mtimeBase = System.currentTimeMillis() - 600000L
-      ev.select(to_json(struct(col("user_id"), col("ts_us"))).as("value"))
-        .coalesce(1).write.mode("append").text(src)
-      pinLandingOrder(src, seen, mtimeBase, 0)
-      Seq(30L, 60L).zipWithIndex.foreach { case (d, i) =>
-        s.createDataFrame(Seq((-1L, maxUs + d * 86400000000L)))
-          .toDF("user_id", "ts_us")
-          .select(to_json(struct(col("user_id"), col("ts_us"))).as("value"))
-          .coalesce(1).write.mode("append").text(src)
-        pinLandingOrder(src, seen, mtimeBase, i + 1)
+      val topic = new OrderedTopic(src)
+      topic.append(ev)
+      Seq(30L, 60L).foreach { d =>
+        topic.append(s.createDataFrame(Seq((-1L, maxUs + d * 86400000000L)))
+          .toDF("user_id", "ts_us"))
       }
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, ts_us BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
           s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-      val sess = decoded.withWatermark("ts", "1 hour")
+      decoded.withWatermark("ts", "1 hour")
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"),
           (unix_micros(max(col("ts"))) - unix_micros(min(col("ts"))))
             .as("span_us"))
         .select("user_id", "n_events", "span_us")
-      graft.streaming.Landing.availableNow(sess, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
-    })
+    }
     s.read.parquet(out).filter(col("user_id") >= 0)
   }
 
@@ -1305,40 +1281,16 @@ object AnalyticsQueries {
     * [[graft.streaming.StreamingBeacon]] in Update mode. All emitted
     * fields are monotone, so the read side compacts with per-user max.
     */
-  private val streamBeaconPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedBeaconMoments(s: SparkSession, dir: String): DataFrame = {
-    val out = streamBeaconPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_beacon_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_beacon", dir, OutputMode.Update) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"),
         unix_micros(col("ts")).as("t_us"), col("event_id"))
-      val (lo, hi) = {
-        val r = ev.agg(min("t_us"), max("t_us")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val step = math.max(1L, (hi - lo) / 4 + 1)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val mtimeBase = System.currentTimeMillis() - 600000L
-      (0 until 4).foreach { i =>
-        ev.filter(col("t_us") >= lo + i * step &&
-            col("t_us") < lo + (i + 1) * step || lit(i == 3) &&
-            col("t_us") >= lo + 4 * step)
-          .orderBy("t_us")
-          .select(to_json(struct(col("user_id"), col("t_us"),
-            col("event_id"))).as("value"))
-          .coalesce(1).write.mode("append").text(src)
-        pinLandingOrder(src, seen, mtimeBase, i)
-      }
+      val topic = new OrderedTopic(src)
+      val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): flush the sub-ms tail
       // the ms-granularity watermark can never pass; filtered on read
-      s.createDataFrame(Seq((-1L, hi + 86400000000L, 0L)))
-        .toDF("user_id", "t_us", "event_id")
-        .select(to_json(struct(col("user_id"), col("t_us"),
-          col("event_id"))).as("value"))
-        .coalesce(1).write.mode("append").text(src)
-      pinLandingOrder(src, seen, mtimeBase, 4)
+      topic.append(s.createDataFrame(Seq((-1L, hi + 86400000000L, 0L)))
+        .toDF("user_id", "t_us", "event_id"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, t_us BIGINT, event_id BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
@@ -1347,12 +1299,9 @@ object AnalyticsQueries {
       // window here is the whole topic): state stays bounded by contract,
       // nothing expires mid-stream, oracle unchanged. The expiry path is
       // pinned in StreamingTtlSpec on a short-horizon fixture.
-      val rows = graft.streaming.StreamingBeacon.gaps(s, decoded,
-        idleHorizonUs = 365L * 86400000000L)
-      graft.streaming.Landing.availableNow(rows.toDF(), sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+      graft.streaming.StreamingBeacon.gaps(s, decoded,
+        idleHorizonUs = 365L * 86400000000L).toDF()
+    }
     s.read.parquet(out).filter(col("user_id") >= 0).groupBy("user_id")
       .agg(max(col("n_gaps")).as("n"), max(col("sg")).as("sg"),
         max(col("sgg")).as("sgg"))
@@ -1362,12 +1311,8 @@ object AnalyticsQueries {
     * per-(type, day) counts in Update mode; counts are monotone so the
     * read side compacts with max — the t15/t16/t17 landing discipline.
     */
-  private val streamTrendingPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedTypeDayCounts(s: SparkSession, dir: String): DataFrame = {
-    val out = streamTrendingPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_trend_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_trend", dir, OutputMode.Update) { src =>
       Tables.events(s, dir)
         .select(to_json(struct(col("event_type"),
           unix_micros(col("ts")).as("ts_us"))).as("value"))
@@ -1376,13 +1321,10 @@ object AnalyticsQueries {
         "event_type STRING, ts_us BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val counts = decoded
+      decoded
         .select(col("event_type"), expr("ts_us div 86400000000").as("day"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      graft.streaming.Landing.availableNow(counts, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("event_type", "day")
       .agg(max(col("n")).as("n"))
   }
@@ -1412,43 +1354,19 @@ object AnalyticsQueries {
     * compaction at all; the census over the landed pairs must equal the
     * batch first-seen census exactly.
     */
-  private val streamFirstSeenPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedFirstSeen(s: SparkSession, dir: String): DataFrame = {
-    val out = streamFirstSeenPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_firstseen_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_firstseen", dir, OutputMode.Append) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t_us"))
-      val (lo, hi) = {
-        val r = ev.agg(min("t_us"), max("t_us")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val step = math.max(1L, (hi - lo) / 4 + 1)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val mtimeBase = System.currentTimeMillis() - 600000L
-      (0 until 4).foreach { i =>
-        ev.filter(col("t_us") >= lo + i * step &&
-            col("t_us") < lo + (i + 1) * step || lit(i == 3) &&
-            col("t_us") >= lo + 4 * step)
-          .orderBy("t_us")
-          .select(to_json(struct(col("user_id"), col("event_type"),
-            col("t_us"))).as("value"))
-          .coalesce(1).write.mode("append").text(src)
-        pinLandingOrder(src, seen, mtimeBase, i)
-      }
+      val topic = new OrderedTopic(src)
+      val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): the buffered fold
       // releases events only once the ms-granularity watermark passes
       // them, and the watermark can never pass the topic's own max
       // event — a negative-keyed far-future row advances it so the tail
       // flushes; filtered on read
-      s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
-        .toDF("user_id", "event_type", "t_us")
-        .select(to_json(struct(col("user_id"), col("event_type"),
-          col("t_us"))).as("value"))
-        .coalesce(1).write.mode("append").text(src)
-      pinLandingOrder(src, seen, mtimeBase, 4)
+      topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
+        .toDF("user_id", "event_type", "t_us"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, event_type STRING, t_us BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
@@ -1456,12 +1374,9 @@ object AnalyticsQueries {
       // novelty horizon sized past the topic span: streamed == all-time
       // batch first-seen (the TTL contract is "first seen within the
       // horizon"; expiry is pinned in StreamingTtlSpec)
-      val pairs = graft.streaming.StreamingFirstSeen.firstSeen(s, decoded,
-        idleHorizonUs = 365L * 86400000000L)
-      graft.streaming.Landing.availableNow(pairs.toDF(), sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
-    })
+      graft.streaming.StreamingFirstSeen.firstSeen(s, decoded,
+        idleHorizonUs = 365L * 86400000000L).toDF()
+    }
     s.read.parquet(out).filter(col("user_id") >= 0).groupBy("day")
       .agg(count(lit(1)).as("n_new_pairs"))
   }
@@ -1471,40 +1386,18 @@ object AnalyticsQueries {
     * source's mtime ordering delivers them in time order — the per-key
     * ordering a user-keyed Kafka topic guarantees), per-user stage rows
     * in Update mode, compacted with per-user max (every field monotone).
+    * Returns the sink path (AnalyticsSpec reads the raw emissions).
     */
-  private val streamFunnelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedFunnelStages(s: SparkSession, dir: String): DataFrame = {
-    val out = streamFunnelPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_funnel_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private[graft] def streamedFunnelSink(s: SparkSession, dir: String): String =
+    Artifacts.drain("stream_funnel", dir, OutputMode.Update) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t_us"))
-      val (lo, hi) = {
-        val r = ev.agg(min("t_us"), max("t_us")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val step = math.max(1L, (hi - lo) / 4 + 1)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val mtimeBase = System.currentTimeMillis() - 600000L
-      (0 until 4).foreach { i =>
-        ev.filter(col("t_us") >= lo + i * step &&
-            col("t_us") < lo + (i + 1) * step || lit(i == 3) &&
-            col("t_us") >= lo + 4 * step)
-          .orderBy("t_us")
-          .select(to_json(struct(col("user_id"), col("event_type"),
-            col("t_us"))).as("value"))
-          .coalesce(1).write.mode("append").text(src)
-        pinLandingOrder(src, seen, mtimeBase, i)
-      }
+      val topic = new OrderedTopic(src)
+      val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): flush the sub-ms tail
       // the ms-granularity watermark can never pass; filtered on read
-      s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
-        .toDF("user_id", "event_type", "t_us")
-        .select(to_json(struct(col("user_id"), col("event_type"),
-          col("t_us"))).as("value"))
-        .coalesce(1).write.mode("append").text(src)
-      pinLandingOrder(src, seen, mtimeBase, 4)
+      topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
+        .toDF("user_id", "event_type", "t_us"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, event_type STRING, t_us BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
@@ -1513,25 +1406,15 @@ object AnalyticsQueries {
       // analyzes the whole topic as one funnel window, so the retention
       // horizon must cover it): state bounded by contract, nothing
       // expires mid-stream. Expiry is pinned in StreamingTtlSpec.
-      val stages = graft.streaming.StreamingFunnel
+      graft.streaming.StreamingFunnel
         .funnel(s, decoded, windowUs = 86400000000L,
-          idleHorizonUs = 365L * 86400000000L)
-      graft.streaming.Landing.availableNow(stages.toDF(), sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
-    s.read.parquet(out).filter(col("user_id") >= 0).groupBy("user_id")
+          idleHorizonUs = 365L * 86400000000L).toDF()
+    }
+  private def streamedFunnelStages(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(streamedFunnelSink(s, dir))
+      .filter(col("user_id") >= 0).groupBy("user_id")
       .agg(max(col("stage")).as("stage"), max(col("t1")).as("t1"),
         max(col("t2")).as("t2"), max(col("t3")).as("t3"))
-  }
-
-  /** Test hook: the funnel landing's sink path for `dir` (materializes
-    * the landing if the spec runs before the query has).
-    */
-  private[graft] def funnelSinkForTest(s: SparkSession, dir: String): String = {
-    streamedFunnelStages(s, dir)
-    streamFunnelPaths(dir)
-  }
 
   val oracles: Map[String, String] = Map(
 

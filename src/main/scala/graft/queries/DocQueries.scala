@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
+import graft.io.Artifacts
 import graft.ops.{CacheRegistry, Dedup, MediaCodec, Multimodal, Sampling, Similarity, TextAnalysis => TA}
 import graft.sources.Tables
 
@@ -33,19 +34,14 @@ object DocQueries {
     * Labels cover only the duplicate subset (docs in some near-dup pair);
     * consumers COALESCE to doc_id for singleton docs.
     */
-  private val dedupLabelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def dedupLabelsArtifact(s: SparkSession, dir: String): String =
-    dedupLabelPaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dedup_labels_").toString + "/labels"
+    Artifacts.land("dedup_labels", dir) { out =>
       val pairs = Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id",
         "text", n = 3, numHashes = 16, bands = 4, tau = JaccardTau)
       Dedup.dedupClusters(pairs)
         .select(col("id").as("doc_id"), col("cluster").as("rep"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Materialize-once MEDIA artifact for `dir`: the encoded PNG/WAV/
     * container payloads ([[MediaCodec.mediaTable]]) land as parquet on
@@ -54,16 +50,10 @@ object DocQueries {
     * the q_mm_* fixtures is the bench-discipline stand-in for that
     * ingest, and this artifact is what repeat decode passes read).
     */
-  private val mediaPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def mediaArtifact(s: SparkSession, dir: String): String =
-    mediaPaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_media_").toString + "/media"
+    Artifacts.land("media", dir)(out =>
       MediaCodec.mediaTable(s, Tables.documents(s, dir)).toDF()
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+        .write.mode("overwrite").parquet(out))
 
   // ---- shared DuckDB fragments ----
 

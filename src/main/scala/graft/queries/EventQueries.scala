@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.functions.{Net, TimeFns}
+import graft.io.Artifacts
 import graft.ops.{Lookups, Normalize, RangeJoin, Rollup}
 import graft.sources.Tables
 
@@ -16,9 +18,6 @@ object EventQueries {
 
   private def se(spark: SparkSession, dir: String): DataFrame =
     Enrich.securityEvents(Tables.events(spark, dir))
-
-  private val navRollupLadders =
-    scala.collection.concurrent.TrieMap.empty[String, Rollup.StatsLadder]
 
   /** k of the ladder's KMV distinct-user sketch (every day×type group in
     * the fixture holds ≥ 42 distinct users, so estimates never null). */
@@ -34,34 +33,28 @@ object EventQueries {
     * the daily, month/quarter/year the monthly (see
     * `q_a2_reagg_navigated`, `q_a2_nav_filtered`, `q_a2_nav_mixed`,
     * `q_a2_nav_monthly`). */
-  /** Diagnostic hook: what every nav query re-pays per call (tools.NavOverhead). */
-  private[graft] def navReadyForDiag(s: SparkSession, dir: String): Unit =
-    navigationReady(s, dir)
-
   private def navigationReady(s: SparkSession, dir: String): Unit = {
+    // per-hour KMV distinct-user sketch rides every rung: merging
+    // partials is exact, so distinct-count dashboards navigate too
+    // event_count rides as a SECOND measure (suffixed partial columns)
+    // so multi-measure dashboards navigate too
+    // value is 2-decimal fixture data: carry the quantized BIGINT sum
+    // partial so navigated AVG recombines exactly (no ulp lottery
+    // against the oracle's round-at-display)
+    def ladder(base: String) = Rollup.StatsLadder(base, "ts", "value",
+      Seq("event_type"), kmvOf = Some((userKmvIn, NavKmvK)),
+      extraMeasures = Seq("event_count"), exactSumScale = Some(2))
     // BUILD once per fixture dir; REGISTER on every call — a suite
     // sharing the JVM may call RollupNavigation.clear() (spec hygiene),
     // and a stale registration cache would leave every later nav query
     // silently riding the raw-scan fallback while its oracle stays green.
-    val ladder = navRollupLadders.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_nav_rollup_").toString
-      // per-hour KMV distinct-user sketch rides every rung: merging
-      // partials is exact, so distinct-count dashboards navigate too
-      val kmvIn = graft.functions.Hashing.md5Long(col("user_id").cast("string"))
-      // event_count rides as a SECOND measure (suffixed partial columns)
-      // so multi-measure dashboards navigate too
-      // value is 2-decimal fixture data: carry the quantized BIGINT sum
-      // partial so navigated AVG recombines exactly (no ulp lottery
-      // against the oracle's round-at-display)
-      val l = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
-        kmvOf = Some((kmvIn, NavKmvK)), extraMeasures = Seq("event_count"),
-        exactSumScale = Some(2))
-      Rollup.buildStatsLadder(s, se(s, dir), l)
-      l
-    })
-    Rollup.registerStatsLadder(s, se(s, dir), ladder)
+    val base = Artifacts.land("nav_rollup", dir)(b =>
+      Rollup.buildStatsLadder(s, se(s, dir), ladder(b)))
+    Rollup.registerStatsLadder(s, se(s, dir), ladder(base))
   }
+
+  private def userKmvIn =
+    graft.functions.Hashing.md5Long(col("user_id").cast("string"))
 
   /** The HLL register frame: events + computed register index (a
     * DIMENSION to navigation) and rho (the MEASURE). Shared by
@@ -74,18 +67,12 @@ object EventQueries {
     se(s, dir).withColumn("reg_idx", Hll.regIdx(h)).withColumn("rho", Hll.rho(h))
   }
 
-  private val hllNavLadders =
-    scala.collection.concurrent.TrieMap.empty[String, Rollup.StatsLadder]
   private def hllNavigationReady(s: SparkSession, dir: String): Unit = {
-    val ladder = hllNavLadders.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_nav_hll_").toString
-      val l = Rollup.StatsLadder(base, "ts", "rho",
-        Seq("event_type", "reg_idx"))
-      Rollup.buildStatsLadder(s, hllFrame(s, dir), l)
-      l
-    })
-    Rollup.registerStatsLadder(s, hllFrame(s, dir), ladder)
+    def ladder(base: String) =
+      Rollup.StatsLadder(base, "ts", "rho", Seq("event_type", "reg_idx"))
+    val base = Artifacts.land("nav_hll", dir)(b =>
+      Rollup.buildStatsLadder(s, hllFrame(s, dir), ladder(b)))
+    Rollup.registerStatsLadder(s, hllFrame(s, dir), ladder(base))
   }
 
   /** Landing for q_a2_nav_refreshed: the ladder built from the FIRST 60%
@@ -98,23 +85,17 @@ object EventQueries {
     * equal a full recompute from raw (the oracle), proving
     * refresh-merge == batch semantics through the OPTIMIZER rewrite.
     */
-  private val refreshedLadders =
-    scala.collection.concurrent.TrieMap.empty[String, Rollup.StatsLadder]
   private def refreshedLadderReady(s: SparkSession, dir: String): Unit = {
-    val ladder = refreshedLadders.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_nav_refresh_").toString
+    def ladder(base: String) = Rollup.StatsLadder(base, "ts", "value",
+      Seq("event_type"), kmvOf = Some((userKmvIn, NavKmvK)))
+    val base = Artifacts.land("nav_refresh", dir) { b =>
       val raw = se(s, dir)
-      val kmvIn = graft.functions.Hashing.md5Long(col("user_id").cast("string"))
-      val l = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
-        kmvOf = Some((kmvIn, NavKmvK)))
       val maxId = raw.agg(max(col("event_id"))).head().getLong(0)
       val cut = (maxId * 0.6).toLong
-      Rollup.buildStatsLadder(s, raw.filter(col("event_id") < cut), l)
-      Rollup.refreshStatsLadder(s, raw.filter(col("event_id") >= cut), l)
-      l
-    })
-    Rollup.registerStatsLadder(s, se(s, dir), ladder)
+      Rollup.buildStatsLadder(s, raw.filter(col("event_id") < cut), ladder(b))
+      Rollup.refreshStatsLadder(s, raw.filter(col("event_id") >= cut), ladder(b))
+    }
+    Rollup.registerStatsLadder(s, se(s, dir), ladder(base))
   }
 
   private def cte(body: String): String =
@@ -198,23 +179,13 @@ object EventQueries {
 
   /** P8 backing store: the events table landed once per sfDir as
     * day-partitioned parquet (A3 retention layout), so the partition-
-    * pruning query reads a real partitioned store. Memoized write-once
-    * per JVM; /tmp is this harness's scratch space.
+    * pruning query reads a real partitioned store ([[Artifacts]]).
     */
-  private val p8Paths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def eventsByDay(s: SparkSession, dir: String): DataFrame = {
-    val path = p8Paths.getOrElseUpdate(dir, {
-      // per-JVM temp dir: a fixed shared path would let a concurrent
-      // harness JVM's overwrite delete files under this JVM's planned scan
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_p8_store_").toString
+  private def eventsByDay(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.land("p8_store", dir)(out =>
       Rollup.writePartitionedByDay(
         Tables.events(s, dir).select(col("event_id"), col("ts"), col("value")),
-        "ts", out)
-      out
-    })
-    s.read.parquet(path)
-  }
+        "ts", out)))
 
   /** Landing for q_maint_compaction: a deliberately FRAGMENTED
     * day-partitioned store (every shuffle task writes into every day →
@@ -224,11 +195,8 @@ object EventQueries {
     * count actually dropped; the query's oracle pins that no row was
     * lost or changed. Memoized once per JVM like the p8 store.
     */
-  private val compactPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def compactedStore(s: SparkSession, dir: String): DataFrame = {
-    val path = compactPaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_compact_store_").toString
+  private def compactedStore(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.land("compact_store", dir) { out =>
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("value"))
         .withColumn("yyyymmdd", TimeFns.toYYYYMMDD(col("ts")))
@@ -238,10 +206,7 @@ object EventQueries {
       require(after < before && after == parts,
         s"compaction must merge to one file per partition: " +
           s"$before -> $after over $parts partitions")
-      out
     })
-    s.read.parquet(path)
-  }
 
   /** Landing for q_a3_incremental_refresh: the day-partitioned rollup
     * store built from the FIRST 60% of events (by event_id), then
@@ -251,12 +216,8 @@ object EventQueries {
     * full recompute from raw events (the oracle), proving delta-merge ==
     * batch semantics. Memoized per JVM.
     */
-  private val incrRefreshPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def incrementallyRefreshedStore(s: SparkSession, dir: String): DataFrame = {
-    val path = incrRefreshPaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_incr_store_").toString
+  private def incrementallyRefreshedStore(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.land("incr_store", dir) { out =>
       val ev = Tables.events(s, dir).select(
         TimeFns.toYYYYMMDD(col("ts")).as("yyyymmdd"),
         col("event_type"), col("event_id"),
@@ -275,21 +236,7 @@ object EventQueries {
         Rollup.refreshAdditive(s, out, slice(lo, hi), "yyyymmdd",
           keyCols = Seq("event_type"), sumCols = Seq("n", "cents"))
       }
-      out
     })
-    s.read.parquet(path)
-  }
-
-  /** Shared streaming-parity landing: drain `stream` into `sink` as
-    * checkpointed parquet with one AvailableNow run; `withBatchId` tags
-    * rows for Update-mode latest-emission compaction on read. Returns
-    * the number of micro-batches that carried input rows (parity paths
-    * with cross-batch emission hazards assert on it).
-    */
-  private def landAvailableNow(stream: DataFrame, sink: String, ckpt: String,
-                               mode: org.apache.spark.sql.streaming.OutputMode,
-                               withBatchId: Boolean = false): Int =
-    graft.streaming.Landing.availableNow(stream, sink, ckpt, mode, withBatchId)
 
   /** T1-T3 end-to-end parity store: the hourly rollup computed BY THE
     * STREAMING PATH — file source -> watermarked 1h window aggregation ->
@@ -307,11 +254,9 @@ object EventQueries {
     * uses a bounded horizon and the delta is documented in
     * [[graft.streaming.StreamingRollup]].
     */
-  private val streamParityPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedHourly(s: SparkSession, dir: String): DataFrame = {
-    val out = streamParityPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_parity_").toString
-      val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private def streamedHourly(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.drain("stream_parity", dir, OutputMode.Update,
+        withBatchId = true) { _ =>
       // streaming sources need a pinned schema — one metadata-only batch
       // read supplies it (S4's schema-union inference, never first-row)
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
@@ -320,15 +265,9 @@ object EventQueries {
       val stream = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
       val ev = Tables.normalizeTs(stream) // fixture dtype dispatch, as Tables.events
-      val roll = graft.streaming.StreamingRollup.hourly(ev, "ts", "value",
+      graft.streaming.StreamingRollup.hourly(ev, "ts", "value",
         dims = Seq("event_type"), lateness = "87600 hours", sumColName = "sum_value")
-      landAvailableNow(roll,
-        sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Update,
-        withBatchId = true)
-      sink
     })
-    s.read.parquet(out)
-  }
 
   /** S1 LIVE-SOURCE PARITY — the graft-events DSv2 connector driven as a
     * micro-batch stream (offset = slices consumed, admission-controlled
@@ -337,22 +276,13 @@ object EventQueries {
     * sfDir. The oracle is the batch aggregate over the same predicate:
     * cursor pagination must neither drop nor duplicate a slice.
     */
-  private val dsv2StreamPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedDsv2(s: SparkSession, dir: String): DataFrame = {
-    val out = dsv2StreamPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2_stream_").toString
-      val sink = s"$root/out"; val ckpt = s"$root/ckpt"
-      val stream = s.readStream.format("graft-events")
+  private def streamedDsv2(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.drain("dsv2_stream", dir, OutputMode.Append)(_ =>
+      s.readStream.format("graft-events")
         .option("maxFilesPerMicroBatch", 1)
         .load(graft.sources.EventsApi.landing(s, dir))
         .filter(col("event_type") =!= "error")
-        .select("event_type", "user_id", "value")
-      landAvailableNow(stream, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
-    })
-    s.read.parquet(out)
-  }
+        .select("event_type", "user_id", "value")))
 
   /** STREAMING DEDUP PATH — file source -> watermarked
     * dropDuplicatesWithinWatermark on a content key -> Append-mode parquet
@@ -362,11 +292,8 @@ object EventQueries {
     * arrival order, so the landed projection is the KEY itself — the
     * deterministic part — and the oracle is the batch DISTINCT.
     */
-  private val streamDedupPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedDedup(s: SparkSession, dir: String): DataFrame = {
-    val out = streamDedupPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_dedup_").toString
-      val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private def streamedDedup(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.drain("stream_dedup", dir, OutputMode.Append) { _ =>
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val stream = s.readStream.schema(rawSchema)
@@ -374,14 +301,9 @@ object EventQueries {
       val ev = Tables.normalizeTs(stream)
         .withColumn("content",
           concat(col("event_type"), lit("#"), (col("event_id") % 997).cast("string")))
-      val dd = graft.streaming.StreamingDedup.exact(ev, "ts", "content",
-        lateness = "87600 hours")
-      landAvailableNow(dd.select("event_type", "content"),
-        sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
+      graft.streaming.StreamingDedup.exact(ev, "ts", "content",
+        lateness = "87600 hours").select("event_type", "content")
     })
-    s.read.parquet(out)
-  }
 
   /** S9 PUSH PARITY — the HttpPushSink transport chain executed for real:
     * every partition's JSON payload is gzipped executor-side and handed to
@@ -391,23 +313,8 @@ object EventQueries {
     * and re-aggregates — proving serialize -> gzip -> transport -> decode
     * round-trips the data exactly, under the driver's DuckDB gate.
     */
-  private val pushParityPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def pushedEvents(s: SparkSession, dir: String): String = {
-    // Cached per sfDir, but VALIDATED on every reuse: the landing lives in
-    // the system temp dir, and a reused session (the bench's retry pass —
-    // the r7 tail's q_s9 analysis stack) can find the cached path emptied
-    // underneath it, turning the downstream `*.gz` glob into an
-    // analysis-time throw. A stale entry is dropped and rebuilt — the
-    // query is idempotent at every sf instead of trusting temp-dir
-    // lifetime.
-    def hasPayload(p: String) = {
-      val d = new java.io.File(p)
-      d.isDirectory &&
-        Option(d.listFiles()).exists(_.exists(_.getName.endsWith(".gz")))
-    }
-    pushParityPaths.get(dir).filterNot(hasPayload).foreach(_ => pushParityPaths.remove(dir))
-    pushParityPaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_push_parity_").toString
+    def land = Artifacts.land("push_parity", dir) { out =>
       val transport: graft.streaming.HttpPushSink.Transport = (batchId, pid, payload) => {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(out, s"b${batchId}_p$pid.gz"), payload)
@@ -415,8 +322,14 @@ object EventQueries {
       }
       val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"))
       graft.streaming.HttpPushSink.pushBatch(ev, batchId = 0L, transport)
-      out
-    })
+    }
+    // VALIDATED on every reuse: a reused session (the bench's retry pass —
+    // the r7 tail's q_s9 analysis stack) once found the landing emptied
+    // underneath it, turning the downstream `*.gz` glob into an
+    // analysis-time throw. A stale artifact is dropped and rebuilt.
+    val d = new java.io.File(land)
+    if (Option(d.listFiles()).exists(_.exists(_.getName.endsWith(".gz")))) d.getPath
+    else { Artifacts.rebind("push_parity", dir, None); land }
   }
 
   /** STREAMING SESSIONS PARITY — the `flatMapGroupsWithState` sessionizer
@@ -430,37 +343,24 @@ object EventQueries {
     * The landed closed-session set is then exactly the batch
     * gaps-and-islands result.
     */
-  private val streamSessionPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedSessions(s: SparkSession, dir: String): DataFrame = {
-    val out = streamSessionPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_sess_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private def streamedSessions(s: SparkSession, dir: String): DataFrame =
+    // exact parity additionally needs all input in ONE batch: a session
+    // split across batches whose bridging event arrives later cannot be
+    // retracted once emitted. The source is written as a single file so
+    // the file source delivers one batch — the drain asserts it stayed so.
+    s.read.parquet(Artifacts.drain("stream_sess", dir, OutputMode.Append,
+        maxBatches = 1) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
       val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 86400L * 1000L)
       val sentinels = ev.select("user_id").distinct()
         .withColumn("ts", lit(sentinelTs))
-      // one file -> the file source delivers one batch (asserted below)
+      // one file -> the file source delivers one batch
       ev.union(sentinels).coalesce(1).write.parquet(src)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .parquet(src)
-      val sessions = graft.streaming.StatefulSessionize
-        .sessionize(s, stream, gapSeconds = 1800L, lateness = "87600 hours")
-      val dataBatches = landAvailableNow(sessions.toDF(),
-        sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
-      // exact parity additionally needs all input in ONE batch: a session
-      // split across batches whose bridging event arrives later cannot be
-      // retracted once emitted. The source is written as a single file so
-      // the file source delivers one batch — assert it stayed that way.
-      if (dataBatches > 1)
-        throw new IllegalStateException(
-          s"session parity store saw $dataBatches input batches (expected 1); " +
-            "cross-batch emission voids exact batch equality")
-      sink
+      graft.streaming.StatefulSessionize.sessionize(s,
+        s.readStream.schema(ev.schema).parquet(src),
+        gapSeconds = 1800L, lateness = "87600 hours").toDF()
     })
-    s.read.parquet(out)
-  }
 
   /** STREAM-STREAM JOIN PARITY — the watermarked interval join landed and
     * compared to the batch join. Inner-join matches append as soon as
@@ -469,11 +369,8 @@ object EventQueries {
     * its partner shows up — so an AvailableNow drain lands exactly the
     * batch join's pair set.
     */
-  private val streamJoinPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val out = streamJoinPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_join_").toString
-      val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private def streamedIntervalJoin(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.drain("stream_join", dir, OutputMode.Append) { _ =>
       Tables.ensureNanosConf(s)
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       def side(eventType: String, key: String, ts: String) =
@@ -481,16 +378,11 @@ object EventQueries {
           .option("pathGlobFilter", "events.parquet").parquet(dir))
           .filter(col("event_type") === eventType)
           .select(col("user_id").as(key), col("ts").as(ts))
-      val joined = graft.streaming.StreamingJoins.intervalJoin(
+      graft.streaming.StreamingJoins.intervalJoin(
         side("purchase", "u", "pts"), side("signup", "su", "sts"),
         keyL = "u", keyR = "su", tsL = "pts", tsR = "sts",
         windowSec = 3600L, lateness = "87600 hours")
-      landAvailableNow(joined,
-        sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
     })
-    s.read.parquet(out)
-  }
 
   /** KAFKA-SHAPE DECODE PARITY — the topic round-trip without a broker:
     * events serialized to one JSON payload per record (`to_json`, exactly
@@ -501,25 +393,16 @@ object EventQueries {
     * round-trip exactly (shortest-repr JSON formatting), so the decoded
     * aggregate hash-matches the batch oracle.
     */
-  private val streamJsonPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedJsonDecode(s: SparkSession, dir: String): DataFrame = {
-    val out = streamJsonPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_json_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private def streamedJsonDecode(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.drain("stream_json", dir, OutputMode.Append) { src =>
       Tables.events(s, dir)
         .select(to_json(struct(col("event_id"), col("user_id"),
           col("event_type"), col("value"))).as("value"))
         .write.text(src)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.text(src), schema)
-      landAvailableNow(decoded,
-        sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
-      sink
+      graft.streaming.KafkaSource.decodeJson(s.readStream.text(src), schema)
     })
-    s.read.parquet(out)
-  }
 
   /** HLL registers computed BY THE STREAMING PATH: JSON topic -> decode ->
     * streaming `groupBy(event_type, reg_idx).agg(max(rho))` in Update mode,
@@ -530,12 +413,9 @@ object EventQueries {
     * streaming landing idempotent (no batch_id bookkeeping needed, unlike
     * the additive hourly rollup).
     */
-  private val streamHllPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedHllRegisters(s: SparkSession, dir: String): DataFrame = {
-    val out = streamHllPaths.getOrElseUpdate(dir, {
+    val out = Artifacts.drain("stream_hll", dir, OutputMode.Update) { src =>
       import graft.functions.{Hashing, Hll}
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_hll_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
       Tables.events(s, dir)
         .select(to_json(struct(col("user_id"), col("event_type"))).as("value"))
         .repartition(4).write.text(src)
@@ -544,13 +424,10 @@ object EventQueries {
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
       val h = Hashing.md5Long(col("user_id").cast("string"))
-      val regs = decoded
+      decoded
         .groupBy(col("event_type"), Hll.regIdx(h).as("reg_idx"))
         .agg(max(Hll.rho(h)).as("rho"))
-      landAvailableNow(regs, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out)
       .groupBy("event_type", "reg_idx").agg(max(col("rho")).as("rho"))
   }
@@ -563,12 +440,9 @@ object EventQueries {
     * exactly like the HLL registers — read-side compaction of Update
     * re-emissions is a plain max, no batch_id bookkeeping.
     */
-  private val streamHistPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedHistogram(s: SparkSession, dir: String): DataFrame = {
-    val out = streamHistPaths.getOrElseUpdate(dir, {
+    val out = Artifacts.drain("stream_hist", dir, OutputMode.Update) { src =>
       import graft.functions.Histogram
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_hist_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
       val r = Tables.events(s, dir).agg(min(col("value")), max(col("value"))).head()
       val (lo, hi) = (r.getDouble(0), r.getDouble(1))
       Tables.events(s, dir)
@@ -578,13 +452,10 @@ object EventQueries {
         "event_type STRING, value DOUBLE")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val hist = decoded
+      decoded
         .groupBy(col("event_type"), Histogram.bin(col("value"), lo, hi, 256).as("bin"))
         .agg(count(lit(1)).as("cnt"))
-      landAvailableNow(hist, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out)
       .groupBy("event_type", "bin").agg(max(col("cnt")).as("cnt"))
   }

@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.functions.Hashing
+import graft.io.Artifacts
 import graft.ops.{CacheRegistry, Dedup, IncrementalIndex, Packing, Sampling, Similarity, TextAnalysis => TA}
 import graft.sources.Tables
 
@@ -1587,21 +1589,13 @@ object PipelineQueries {
     }
   }
 
-  private val knnEdgePaths = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Test seam: point `dir`'s edge artifact at a pre-built path (returns
     * the previous binding so the spec can restore it). Lets the
     * differential spec feed the UNCHANGED consumer queries a hier-built
     * edge table at fixture scale. */
   private[graft] def seedKnnEdges(dir: String,
-                                  path: Option[String]): Option[String] = {
-    val prev = knnEdgePaths.get(dir)
-    path match {
-      case Some(p) => knnEdgePaths.put(dir, p)
-      case None => knnEdgePaths.remove(dir)
-    }
-    prev
-  }
+                                  path: Option[String]): Option[String] =
+    Artifacts.rebind("knn_edges", dir, path)
 
   /** MATERIALIZED kNN edge set — the graph-family sibling of
     * [[DocQueries.dedupLabelsArtifact]]: the expensive derivation
@@ -1635,13 +1629,8 @@ object PipelineQueries {
       .distinct()
 
   private[graft] def knnEdgesArtifact(s: SparkSession, dir: String): String =
-    knnEdgePaths.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_knn_edges_").toString + "/edges"
-      foldUndirected(knnEdgesDf(s, dir))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+    Artifacts.land("knn_edges", dir)(out =>
+      foldUndirected(knnEdgesDf(s, dir)).write.mode("overwrite").parquet(out))
 
   /** The planted-signal retrieval fixture shared by the sparse IR family
     * (see q_sim_sparse_cosine's scaladoc for why signals are planted). */
@@ -1651,8 +1640,6 @@ object PipelineQueries {
         lit(" topic"), (col("doc_id") % 40).cast("string"),
         lit(" topic"), (col("doc_id") % 40).cast("string"),
         lit(" ent"), (col("doc_id") % 200).cast("string")).as("text"))
-
-  private val irIndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** MATERIALIZED inverted index — the IR-family materialize-once
     * artifact: the corpus-priced build (tokenize → hash → tf → df →
@@ -1665,17 +1652,12 @@ object PipelineQueries {
     * artifact ROOT (two subdirs).
     */
   private[graft] def irIndexArtifact(s: SparkSession, dir: String): String =
-    irIndexPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ir_index_").toString
+    Artifacts.land("ir_index", dir) { root =>
       val (postings, doclen) = TA.irIndex(plantedDocs(s, dir),
         "doc_id", "text", isQuery = col("doc_id") < 20, stopTermFrac = 0.05)
       postings.write.mode("overwrite").parquet(root + "/postings")
       doclen.write.mode("overwrite").parquet(root + "/doclen")
-      root
-    })
-
-  private val knnIncPaths = scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** INCREMENTALLY-maintained kNN store (see `q_knn_edges_incremental`):
     * built on the first 80% of vectors, refreshed with the newest 20% —
@@ -1683,9 +1665,7 @@ object PipelineQueries {
     * aggregate), matching the oracle's base/delta split.
     */
   private[graft] def knnIncArtifact(s: SparkSession, dir: String): String =
-    knnIncPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_knn_inc_").toString
+    Artifacts.land("knn_inc", dir) { root =>
       val em = Tables.embeddings(s, dir)
       val deltaFrom =
         (em.agg(max(col("vec_id"))).head().getLong(0) + 1L) * 4L / 5L
@@ -1693,10 +1673,7 @@ object PipelineQueries {
         em.filter(col("vec_id") < deltaFrom), "vec_id", "embedding", root)
       IncrementalIndex.Knn.refresh(s, root,
         em.filter(col("vec_id") >= deltaFrom), "vec_id", "embedding")
-      root
-    })
-
-  private val knnInc2Paths = scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** INCREMENTALLY-maintained TWO-LEVEL kNN store (see
     * `q_knn_edges_incremental_hier`): the hierarchical sibling of
@@ -1705,9 +1682,7 @@ object PipelineQueries {
     * deriveBlocks boundary rule as the flat store.
     */
   private[graft] def knnInc2Artifact(s: SparkSession, dir: String): String =
-    knnInc2Paths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_knn_inc2_").toString
+    Artifacts.land("knn_inc2", dir) { root =>
       val em = Tables.embeddings(s, dir)
       val deltaFrom =
         (em.agg(max(col("vec_id"))).head().getLong(0) + 1L) * 4L / 5L
@@ -1715,19 +1690,14 @@ object PipelineQueries {
         em.filter(col("vec_id") < deltaFrom), "vec_id", "embedding", root)
       IncrementalIndex.Knn2.refresh(s, root,
         em.filter(col("vec_id") >= deltaFrom), "vec_id", "embedding")
-      root
-    })
-
-  private val irIncPaths = scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** INCREMENTALLY-maintained inverted-index store (see
     * `q_ir_index_incremental`): base = first 80% of docs, delta = the
     * newest 20%, same planted-signal fixture as the materialized index.
     */
   private[graft] def irIncArtifact(s: SparkSession, dir: String): String =
-    irIncPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ir_inc_").toString
+    Artifacts.land("ir_inc", dir) { root =>
       val docs = plantedDocs(s, dir)
       val deltaFrom =
         (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 4L / 5L
@@ -1736,15 +1706,11 @@ object PipelineQueries {
         "doc_id", "text", isq, root)
       IncrementalIndex.Ir.refresh(s, root,
         docs.filter(col("doc_id") >= deltaFrom), "doc_id", "text", isq)
-      root
-    })
+    }
 
-  private val streamCmsPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedCountMinRegs(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing
-    val out = streamCmsPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_cms_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_cms", dir, OutputMode.Update) { src =>
       Tables.documents(s, dir)
         .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
         .repartition(4).write.text(src)
@@ -1757,7 +1723,7 @@ object PipelineQueries {
       // the generator (explode over computed structs) evaluates it
       // INTERPRETED per emitted row — measured 71 s landing vs ~8 s for
       // this shape at sf0.1 (the Generate/CollapseProject trap, again).
-      val regs = decoded
+      decoded
         .select(explode(TA.tokens(col("text"))).as("token"))
         .select(col("token"), explode(typedLit((0L until 4L).toSeq)).as("s"))
         .select(col("s"),
@@ -1765,18 +1731,12 @@ object PipelineQueries {
             col("s").cast("string"))) % 64).as("b"))
         .groupBy(col("s"), col("b"))
         .agg(count(lit(1)).as("c"))
-      graft.streaming.Landing.availableNow(regs, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("s", "b").agg(max(col("c")).as("c"))
   }
 
-  private val streamDeconPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedContaminationFlags(s: SparkSession, dir: String): DataFrame = {
-    val out = streamDeconPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_decon_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_decon", dir, OutputMode.Update) { src =>
       val docs = Tables.documents(s, dir)
       val bench = Dedup.shingles(docs.filter(col("source") === "src0"),
         "doc_id", "text", n = 5).select("shingle").distinct()
@@ -1787,13 +1747,10 @@ object PipelineQueries {
         "doc_id BIGINT, text STRING")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val flags = Dedup.shingles(decoded, "doc_id", "text", n = 5)
+      Dedup.shingles(decoded, "doc_id", "text", n = 5)
         .join(broadcast(bench), Seq("shingle"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
-      graft.streaming.Landing.availableNow(flags, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("doc_id").agg(max(col("n_overlap")).as("n_overlap"))
   }
 
@@ -1802,11 +1759,8 @@ object PipelineQueries {
     * embeddings topic through the same assignment expression, land the
     * Update-mode per-cell aggregate, compact with a read-side max.
     */
-  private val streamIvfPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedIvfAssign(s: SparkSession, dir: String): DataFrame = {
-    val out = streamIvfPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_ivf_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_ivf", dir, OutputMode.Update) { src =>
       val em = Tables.embeddings(s, dir)
       val cents = Similarity.kmeansTrain(em, "vec_id", "embedding", k = 8, iters = 2)
       em.select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
@@ -1818,15 +1772,12 @@ object PipelineQueries {
       // same output shape as q_emb_kmeans: every measure (count, id
       // checksum, inertia) is a monotone non-negative accumulator, so the
       // read-side max compaction is exact
-      val counts = Similarity
+      Similarity
         .assignWithCentroids(decoded, "vec_id", "embedding", cents.toSeq)
         .groupBy("cell")
         .agg(count(lit(1)).as("n_members"), sum(col("id")).as("id_checksum"),
           sum(col("dist")).as("inertia"))
-      graft.streaming.Landing.availableNow(counts, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("cell")
       .agg(max(col("n_members")).as("n_members"),
         max(col("id_checksum")).as("id_checksum"),
@@ -1852,12 +1803,8 @@ object PipelineQueries {
     * arriving batch touches ~1/k of the corpus index, and a hot cell is
     * bounded by the same cap family as the batch kernel.
     */
-  private[graft] val streamSemPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def streamedSemanticFlags(s: SparkSession, dir: String): DataFrame = {
-    val out = streamSemPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_sem_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+  private[graft] def streamedSemanticSink(s: SparkSession, dir: String): String =
+    Artifacts.drain("stream_sem", dir, OutputMode.Update) { src =>
       val em = Tables.embeddings(s, dir)
       val corpus = em.filter(col("vec_id") < SemStreamCut)
       val cents = Similarity.kmeansTrain(corpus, "vec_id", "embedding",
@@ -1886,20 +1833,17 @@ object PipelineQueries {
       // only the emitted measure
       val craw = Similarity.dotQ(col("qi"), col("qj")).cast("double") /
         (sqrt(col("ni").cast("double")) * sqrt(col("nj").cast("double")))
-      val flags = arrivals.join(corpusIdx, "cell")
+      arrivals.join(corpusIdx, "cell")
         .withColumn("craw", craw)
         .filter(col("craw") >= SemanticTau)
         .groupBy(col("j"))
         .agg(count(lit(1)).as("n_dups"), min(col("i")).as("first_dup"),
           max(round(col("craw"), 4)).as("max_cos"))
-      graft.streaming.Landing.availableNow(flags, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
-    s.read.parquet(out).groupBy("j")
+    }
+  private def streamedSemanticFlags(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(streamedSemanticSink(s, dir)).groupBy("j")
       .agg(max(col("n_dups")).as("n_dups"), min(col("first_dup")).as("first_dup"),
         max(col("max_cos")).as("max_cos"))
-  }
 
   /** Landing for [[queries q_t28_streaming_semantic_hier]] — the
     * q_t12 ingest shape re-based on the TWO-LEVEL index (r15 verdict #7:
@@ -1919,12 +1863,8 @@ object PipelineQueries {
     * Oracle = the batch fine-cell pairs (fmem × qprobe under
     * corpus-frozen geometry) restricted to the drained backlog.
     */
-  private[graft] val streamSemHierPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedSemanticHierFlags(s: SparkSession, dir: String): DataFrame = {
-    val out = streamSemHierPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_semh_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_semh", dir, OutputMode.Update) { src =>
       val em = Tables.embeddings(s, dir)
       val corpus = em.filter(col("vec_id") < SemStreamCut)
       val nCorpus = corpus.count()
@@ -1959,16 +1899,13 @@ object PipelineQueries {
       // so ni·nj then divide is the exact oracle float shape
       val craw = Similarity.dotQ(col("qi"), col("qj")).cast("double") /
         (col("ni") * col("nj"))
-      val flags = arrivals.join(corpusIdx, "cell")
+      arrivals.join(corpusIdx, "cell")
         .withColumn("craw", craw)
         .filter(col("craw") >= SemanticTau)
         .groupBy(col("j"))
         .agg(count(lit(1)).as("n_dups"), min(col("i")).as("first_dup"),
           max(round(col("craw"), 4)).as("max_cos"))
-      graft.streaming.Landing.availableNow(flags, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("j")
       .agg(max(col("n_dups")).as("n_dups"), min(col("first_dup")).as("first_dup"),
         max(col("max_cos")).as("max_cos"))
@@ -1988,13 +1925,9 @@ object PipelineQueries {
     * == the naive-GROUP-BY oracle, deterministically. The ingest shape a
     * 100 TB pipeline wants: the vocabulary never enters streaming state.
     */
-  private val streamHeavyPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.MisraGries
-    val out = streamHeavyPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_mg_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_mg", dir, OutputMode.Update) { src =>
       Tables.documents(s, dir)
         .select(to_json(struct(col("doc_id"), col("lang"), col("text"))).as("value"))
         .repartition(4).write.text(src)
@@ -2002,15 +1935,12 @@ object PipelineQueries {
         "doc_id BIGINT, lang STRING, text STRING")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val sk = decoded
+      decoded
         .select(col("lang"), explode(TA.tokens(col("text"))).as("token"))
         .groupBy("lang")
         .agg(MisraGries.candidates(col("token"), HeavyHitterCap).as("cands"),
           count(lit(1)).as("total"))
-      graft.streaming.Landing.availableNow(sk, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("total").desc)
     val fin = s.read.parquet(out)

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import graft.io.Artifacts
 import graft.ops.{Profiling, TextAnalysis => TA}
 import graft.sources.Tables
 
@@ -499,12 +501,8 @@ object QualityQueries {
     * usual read-side max. Constraint validation at ingest: the report is
     * live after every micro-batch instead of waiting for a batch sweep.
     */
-  private val streamValidatePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedOrderCheckSums(s: SparkSession, dir: String): DataFrame = {
-    val out = streamValidatePaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_validate_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_validate", dir, OutputMode.Update) { src =>
       Tables.orders(s, dir)
         .select(to_json(struct(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"),
@@ -515,15 +513,12 @@ object QualityQueries {
           "o_totalprice DOUBLE, o_orderpriority STRING")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val sums = decoded.agg(count(lit(1)).as("t"),
+      decoded.agg(count(lit(1)).as("t"),
         sum(when(col("o_custkey").isNotNull, 1L).otherwise(0L)).as("g0"),
         sum(when(col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L)).as("g1"),
         sum(when(col("o_totalprice") > 0, 1L).otherwise(0L)).as("g2"),
         sum(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)).as("g3"))
-      graft.streaming.Landing.availableNow(sums, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).agg(max(col("t")).as("t"), max(col("g0")).as("g0"),
       max(col("g1")).as("g1"), max(col("g2")).as("g2"), max(col("g3")).as("g3"))
   }
@@ -534,12 +529,8 @@ object QualityQueries {
     * non-decreasing across batches, so the read side compacts with a
     * plain max per day — the q_t15/q_t16 landing discipline.
     */
-  private val streamAnomalyPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedDailyCounts(s: SparkSession, dir: String): DataFrame = {
-    val out = streamAnomalyPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_anomaly_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_anomaly", dir, OutputMode.Update) { src =>
       Tables.events(s, dir)
         .select(to_json(struct(col("event_id"),
           unix_micros(col("ts")).as("ts_us"))).as("value"))
@@ -548,13 +539,10 @@ object QualityQueries {
         "event_id BIGINT, ts_us BIGINT")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val byDay = decoded
+      decoded
         .select(expr("ts_us div 86400000000").as("day"))
         .groupBy("day").agg(count(lit(1)).as("n"))
-      graft.streaming.Landing.availableNow(byDay, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("day").agg(max(col("n")).as("n"))
   }
 
@@ -578,13 +566,9 @@ object QualityQueries {
     * batch_id and the read side keeps each day's LATEST emission (the t2
     * parity discipline), reducing mod 2^61 batch-side.
     */
-  private val streamManifestPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedManifest(s: SparkSession, dir: String): DataFrame = {
-    val out = streamManifestPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_manifest_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_manifest", dir, OutputMode.Update,
+        withBatchId = true) { src =>
       Tables.events(s, dir)
         .select(to_json(struct(col("event_id"),
           unix_micros(col("ts")).as("ts_us"), col("user_id"),
@@ -598,16 +582,13 @@ object QualityQueries {
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
       val rowRepr = concat_ws("|", col("event_id"), col("ts_us"),
         col("user_id"), col("event_type"), col("cents"))
-      val byDay = decoded
+      decoded
         .select(expr("ts_us div 86400000000").as("day"),
           graft.functions.Hashing.md5Long(rowRepr)
             .cast("decimal(38,0)").as("h"))
         .groupBy("day")
         .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-      graft.streaming.Landing.availableNow(byDay, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update, withBatchId = true)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("day")
       .agg(max_by(col("n"), col("batch_id")).as("n"),
         max_by(col("hsum"), col("batch_id")).as("hsum"))
@@ -700,12 +681,8 @@ object QualityQueries {
     * (O(nBins) state). Counts are monotone non-decreasing across batches,
     * so read-side compaction is a plain max — the same no-batch_id
     * discipline as the streamed CMS/HLL/histogram registers. */
-  private val streamDriftPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def streamedDriftBins(s: SparkSession, dir: String): DataFrame = {
-    val out = streamDriftPaths.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_drift_").toString
-      val src = s"$root/src"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
+    val out = Artifacts.drain("stream_drift", dir, OutputMode.Update) { src =>
       val (mid, minv, maxv) = driftParams(s, dir)
       Tables.normalizeTs(Tables.orders(s, dir), "o_orderdate")
         .filter(unix_micros(col("o_orderdate")) >= mid)
@@ -715,13 +692,10 @@ object QualityQueries {
         "o_orderkey BIGINT, o_totalprice DOUBLE")
       val decoded = graft.streaming.KafkaSource.decodeJson(
         s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      val bins = decoded
+      decoded
         .select(binCol(col("o_totalprice"), minv, maxv).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("cb"))
-      graft.streaming.Landing.availableNow(bins, sink, ckpt,
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      sink
-    })
+    }
     s.read.parquet(out).groupBy("bin").agg(max(col("cb")).as("cb"))
   }
 

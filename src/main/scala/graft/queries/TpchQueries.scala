@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.Artifacts
 import graft.sources.Tables
 
 /** Analytical query shapes over the star schema (SURVEY §2.4 superset +
@@ -51,12 +52,8 @@ object TpchQueries {
     * original parquet — any row or value the format layer dropped or
     * bent breaks the hash.
     */
-  private val srcFmtPaths =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def roundtripPath(s: SparkSession, dir: String, fmt: String): String =
-    srcFmtPaths.getOrElseUpdate((dir, fmt), {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft_src_${fmt}_").toString + "/t"
+    Artifacts.land(s"src_$fmt", dir) { out =>
       val slim0 = Tables.lineitem(s, dir).select(
         col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         col("l_quantity").cast("long").as("qty"),
@@ -86,16 +83,15 @@ object TpchQueries {
       // retry semantics need the pre-shuffle sort anyway (guide §2.5)
       val slim = if (fmt == "orc") slim0
         else slim0.repartition(chunks, col("l_orderkey"))
+      val w = slim.write.mode("overwrite")
       fmt match {
-        case "csv" => slim.write.option("header", "true")
-          .option("compression", "gzip").csv(out)
-        case "orc" => slim.write.orc(out)
+        case "csv" => w.option("header", "true").option("compression", "gzip").csv(out)
+        case "orc" => w.orc(out)
         // the reference's actual wire format: gzip JSON lines
         // (qradar/qradarconnector.py streams gzipped JSON results)
-        case "json" => slim.write.option("compression", "gzip").json(out)
+        case "json" => w.option("compression", "gzip").json(out)
       }
-      out
-    })
+    }
   private def roundtripAgg(df: DataFrame): DataFrame =
     df.groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), sum(col("qty")).as("sum_qty"),
@@ -411,7 +407,7 @@ object TpchQueries {
       import graft.ops.Graph
       val li = Tables.lineitem(s, dir)
         .select((col("l_suppkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
-      // Cost attribution (tools/PrDiag): r16 re-measured prep at 1.2 s of
+      // Cost attribution (OPTIMIZATION_r16.md): r16 re-measured prep at 1.2 s of
       // the ~5.6 s steady query — the rounds, not prep, carry the rest
       // (the r14 "prep dominates" reading didn't survive re-measurement
       // on a quiet box). Two "obvious" prep rewrites measured WORSE and

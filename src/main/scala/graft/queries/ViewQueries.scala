@@ -87,21 +87,15 @@ object ViewQueries {
         dims = Seq("domain_id", "dest_geo"),
         hourColName = "hour", sumColName = "sum_event_count")))
 
-  /** Materialized-store paths, one per sfDir, written on first access in
-    * this JVM (a per-JVM temp dir for the same reason as the P8 store —
-    * a fixed shared path would race concurrent harness JVMs).
-    */
-  private val stores = scala.collection.concurrent.TrieMap.empty[String, String]
-
+  /** The materialized store, one per sfDir, written on first access in
+    * this JVM. */
   private def store(s: SparkSession, dir: String): String =
-    stores.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_views_").toString
+    graft.io.Artifacts.land("views", dir) { root =>
       val ev = Enrich.securityEvents(Tables.events(s, dir))
       definitions.foreach { case (name, build) =>
         Rollup.writePartitionedByDay(build(ev), "hour", s"$root/$name")
       }
-      root
-    })
+    }
 
   /** `GLOBALVIEW(name, 'NORMAL')` — scan the materialized view. */
   def globalView(s: SparkSession, dir: String, name: String): DataFrame = {

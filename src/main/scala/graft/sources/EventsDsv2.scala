@@ -98,18 +98,14 @@ object EventsApi {
     * range (the reference's searches are time-bounded ranged scans, S3),
     * with a per-slice min/max/count stats sidecar the scan prunes against.
     */
-  private val landings = TrieMap.empty[String, String]
   def landing(s: SparkSession, dir: String): String =
-    landings.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dsv2_events_").toString + "/events"
+    graft.io.Artifacts.land("dsv2_events", dir) { out =>
       Tables.ensureNanosConf(s)
       withTsNanos(s.read.parquet(s"$dir/events.parquet"))
         .repartitionByRange(4, org.apache.spark.sql.functions.col("ts_nanos"))
-        .write.json(out)
+        .write.mode("overwrite").json(out)
       writeStats(s, out)
-      out
-    })
+    }
 
   /** Derive `ts_nanos` EXPLICITLY as the Long the connector schema
     * declares, whatever the fixture's physical ts encoding — a bare

@@ -9,9 +9,9 @@ import graft.sources.Tables
   * delta folded into ladders of growing span. The claim is O(delta +
   * touched partitions) — refresh time must stay flat while the store
   * span (and so the hourly rung's row/partition count) grows. Spans are
-  * built by time-shifting the sf fixture (5 months per copy, like
-  * NavDiag); the delta is the final month re-shifted past the end so it
-  * always touches ~31 fresh day-partitions.
+  * built by time-shifting the sf fixture (5 months per copy, like the
+  * SCALE.md monthly-dashboard rungs); the delta is the final month
+  * re-shifted past the end so it always touches ~31 fresh day-partitions.
   */
 object LadderStress {
   def main(args: Array[String]): Unit = {

@@ -122,7 +122,7 @@ class AnalyticsSpec extends SparkSpec {
     // the topic is 4 time-ranged files at maxFilesPerTrigger=1 — the
     // Update-mode landing must show users re-emitted across batches
     // (otherwise the "streaming" test degenerated to one batch)
-    val sink = AnalyticsQueries.funnelSinkForTest(spark, dir)
+    val sink = AnalyticsQueries.streamedFunnelSink(spark, dir)
     val perUser = spark.read.parquet(sink).groupBy("user_id").count()
       .agg(max("count")).head().getLong(0)
     assert(perUser > 1L, "expected multi-batch per-user emissions")

@@ -99,7 +99,7 @@ class SemanticDedupSpec extends SparkSpec {
     // each arrival lives in exactly one micro-batch, so Update mode must
     // emit every flagged arrival exactly once — a second row for any j
     // would mean the backlog replayed
-    val sink = PipelineQueries.streamSemPaths(sf)
+    val sink = PipelineQueries.streamedSemanticSink(spark, sf)
     val landed = spark.read.parquet(sink)
     val dupEmits = landed.groupBy("j").count().filter(col("count") > 1).count()
     assert(dupEmits == 0, "an arrival was emitted twice - backlog replayed")
