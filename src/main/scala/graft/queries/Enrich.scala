@@ -60,32 +60,35 @@ object Enrich {
         .when(e % 3 === 1, lit(8L * 16777216L + 8L * 65536L) + (u % 256) * 256L + e % 256)
         .otherwise(lit(172L * 16777216L) + (lit(16L) + u % 16) * 65536L +
           lit(5L * 256L) + e % 256)
-    events
-      .withColumn("source_ip", srcIp)
-      .withColumn("destination_ip", dstIp)
-      .withColumn("source_ip_packed", srcPacked)
-      .withColumn("destination_ip_packed", dstPacked)
-      .withColumn("destination_port", (e * 131) % 1000)
+    // One projection for all 20 columns (none exists in `events`): chained
+    // withColumn calls re-analyze the growing plan once per call.
+    val derived = Seq(
+      "source_ip" -> srcIp,
+      "destination_ip" -> dstIp,
+      "source_ip_packed" -> srcPacked,
+      "destination_ip_packed" -> dstPacked,
+      "destination_port" -> (e * 131) % 1000,
       // (e/11) decorrelates category from the mod-4/mod-3 IP branches so
       // composite category+CIDR predicates keep non-trivial selectivity
-      .withColumn("category", lit(4000L) + (e / 11).cast("long") % 48)
-      .withColumn("highlevelcategory", lit(3000L) + (u % 2) * 1000)
-      .withColumn("domain_id", (u % 25).cast("int"))
-      .withColumn("qid", e % 200)
-      .withColumn("device_type", (e % 5).cast("int"))
+      "category" -> (lit(4000L) + (e / 11).cast("long") % 48),
+      "highlevelcategory" -> (lit(3000L) + (u % 2) * 1000),
+      "domain_id" -> (u % 25).cast("int"),
+      "qid" -> e % 200,
+      "device_type" -> (e % 5).cast("int"),
       // custom-property analogs used by the faithful AllowedInbound/
       // Outbound projections (reference: qradar/input/queries.json:2-3)
-      .withColumn("source_port", (e * 17) % 65536)
-      .withColumn("event_count", lit(1L) + e % 5)
-      .withColumn("rule_name", concat(lit("rule_"), s(e % 7)))
-      .withColumn("source_geo", concat(lit("geo_"), s(u % 30)))
-      .withColumn("dest_geo", concat(lit("geo_"), s((u + 7) % 30)))
-      .withColumn("mitre_tactic", concat(lit("TA00"), s(e % 10)))
-      .withColumn("mitre_technique", concat(lit("T1"), s(lit(100L) + e % 90)))
-      .withColumn("action",
-        when(e % 3 === 0, "permit").when(e % 3 === 1, "deny").otherwise("monitor"))
-      .withColumn("policy_name", concat(lit("policy_"), s(u % 12)))
-      .withColumn("log_source_id", (e % 100).cast("int"))
+      "source_port" -> (e * 17) % 65536,
+      "event_count" -> (lit(1L) + e % 5),
+      "rule_name" -> concat(lit("rule_"), s(e % 7)),
+      "source_geo" -> concat(lit("geo_"), s(u % 30)),
+      "dest_geo" -> concat(lit("geo_"), s((u + 7) % 30)),
+      "mitre_tactic" -> concat(lit("TA00"), s(e % 10)),
+      "mitre_technique" -> concat(lit("T1"), s(lit(100L) + e % 90)),
+      "action" ->
+        when(e % 3 === 0, "permit").when(e % 3 === 1, "deny").otherwise("monitor"),
+      "policy_name" -> concat(lit("policy_"), s(u % 12)),
+      "log_source_id" -> (e % 100).cast("int"))
+    events.select(col("*") +: derived.map { case (n, c) => c.as(n) }: _*)
   }
 
   /** DuckDB mirror of [[securityEvents]] as a CTE body. Oracle queries embed

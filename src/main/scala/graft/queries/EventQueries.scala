@@ -257,10 +257,10 @@ object EventQueries {
   private def streamedHourly(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_parity", dir, OutputMode.Update,
         withBatchId = true) { _ =>
-      // streaming sources need a pinned schema — one metadata-only batch
-      // read supplies it (S4's schema-union inference, never first-row)
+      // streaming sources need a pinned schema; the table catalog serves
+      // it (S4's schema-union inference, never first-row)
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.schema(s, dir, "events")
       // the file source wants a directory; glob-filter it to the events table
       val stream = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -295,7 +295,7 @@ object EventQueries {
   private def streamedDedup(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_dedup", dir, OutputMode.Append) { _ =>
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.schema(s, dir, "events")
       val stream = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
       val ev = Tables.normalizeTs(stream)
@@ -325,7 +325,7 @@ object EventQueries {
     }
     // VALIDATED on every reuse: a reused session (the bench's retry pass —
     // the r7 tail's q_s9 analysis stack) once found the landing emptied
-    // underneath it, turning the downstream `*.gz` glob into an
+    // underneath it, turning the downstream `.gz` read into an
     // analysis-time throw. A stale artifact is dropped and rebuilt.
     val d = new java.io.File(land)
     if (Option(d.listFiles()).exists(_.exists(_.getName.endsWith(".gz")))) d.getPath
@@ -372,7 +372,7 @@ object EventQueries {
   private def streamedIntervalJoin(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_join", dir, OutputMode.Append) { _ =>
       Tables.ensureNanosConf(s)
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.schema(s, dir, "events")
       def side(eventType: String, key: String, ts: String) =
         Tables.normalizeTs(s.readStream.schema(rawSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -555,7 +555,7 @@ object EventQueries {
     "q_s9_push_parity" -> ((s, dir) => {
       import s.implicits._
       val outDir = pushedEvents(s, dir)
-      s.read.format("binaryFile").load(s"$outDir/*.gz")
+      s.read.format("binaryFile").option("pathGlobFilter", "*.gz").load(outDir)
         .select(col("content")).as[Array[Byte]]
         .flatMap { gz =>
           val in = new java.util.zip.GZIPInputStream(

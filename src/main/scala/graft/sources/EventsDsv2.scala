@@ -101,7 +101,7 @@ object EventsApi {
   def landing(s: SparkSession, dir: String): String =
     graft.io.Artifacts.land("dsv2_events", dir) { out =>
       Tables.ensureNanosConf(s)
-      withTsNanos(s.read.parquet(s"$dir/events.parquet"))
+      withTsNanos(Tables.read(s, dir, "events"))
         .repartitionByRange(4, org.apache.spark.sql.functions.col("ts_nanos"))
         .write.mode("overwrite").json(out)
       writeStats(s, out)
@@ -260,7 +260,7 @@ object EventsApi {
     locally {
       import spark.implicits._
       // (file, n, col, isLong, loBits, hiBits) — one row per (slice, column)
-      val flat = spark.read.textFile(statsDir.toString + "/*.json")
+      val flat = spark.read.option("pathGlobFilter", "*.json").textFile(statsDir.toString)
         .flatMap { line =>
           val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
           val node = mapper.readTree(line)

@@ -1,7 +1,13 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table readers over the engine's parquet storage (SURVEY §2.1 S3/S5/S7).
@@ -10,6 +16,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * (reference: etl.py:57-65, clickhouse/clickhouse.py:60-67); the engine's
   * native storage is partitioned parquet, read through Spark's vectorized
   * reader (columnar, predicate/column pushdown for free).
+  *
+  * Each table's schema is inferred once and handed to the reader, the way
+  * the reference's store keeps columns in its catalog: a stock parquet
+  * open re-infers the schema in one Spark job every time.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,7 +27,52 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    spark.read.schema(schema(spark, dir, table)).parquet(s"$dir/$table.parquet")
+
+  /** The session confs that change what parquet schema inference returns:
+    * the ones Spark 4.1's `ParquetToSparkSchemaConverter(SQLConf)` reads
+    * (binaryAsString, int96AsTimestamp, caseSensitive,
+    * inferTimestampNTZ.enabled, nanosAsLong, fieldId.read.enabled,
+    * ignoreVariantAnnotation, reader.respectUnknownTypeAnnotation and
+    * variant.allowReadingShredded), plus the ones `ParquetUtils.inferSchema`
+    * reads to pick and read the footers (mergeSchema,
+    * respectSummaryFiles, files.ignoreCorruptFiles). */
+  private val schemaConfs: Seq[String] = Seq(
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+    SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+    SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+    SQLConf.VARIANT_ALLOW_READING_SHREDDED, SQLConf.PARQUET_SCHEMA_MERGING_ENABLED,
+    SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES, SQLConf.IGNORE_CORRUPT_FILES).map(_.key)
+
+  /** (path, leaf files as (path, length, mtime), schema conf values) ->
+    * schema. Schemas only: no DataFrame, rows or file index. */
+  private val schemas =
+    TrieMap.empty[(String, Seq[(String, Long, Long)], Seq[Option[String]]), StructType]
+
+  /** The schema `spark.read.parquet` infers for `table`, inferred once per
+    * file listing and conf state in this JVM. The listing comes from the
+    * Hadoop FileSystem, so a hit runs no Spark job; a rewritten or
+    * re-configured table misses and is inferred again. */
+  def schema(spark: SparkSession, dir: String, table: String): StructType = {
+    val path = s"$dir/$table.parquet"
+    val p = new Path(path)
+    val listing =
+      try Some(leafFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+      catch { case _: FileNotFoundException => None }
+    // a missing table falls through to the stock reader and its own error
+    listing.fold(spark.read.parquet(path).schema) { files =>
+      schemas.getOrElseUpdate((path, files, schemaConfs.map(spark.conf.getOption)),
+        spark.read.parquet(path).schema)
+    }
+  }
+
+  private def leafFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) leafFiles(fs, st.getPath)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    }.sorted
 
   /** GraftSession.builder sets the nanos conf at session build; this
     * guard is the fallback for externally-built sessions, and never

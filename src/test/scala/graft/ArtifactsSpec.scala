@@ -71,17 +71,18 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("the shutdown routine deletes a root tree without following symlinks") {
-    val root = Files.createTempDirectory("graft_spec_root_")
-    val outside = Files.createTempFile("graft_spec_keep_", ".txt")
-    try {
-      val art = Files.createDirectories(root.resolve("graft_a_1/out/part=0"))
-      Files.write(art.resolve("f.parquet"), Array[Byte](0))
-      Files.write(root.resolve("graft_a_1/.f.parquet.crc"), Array[Byte](0))
-      Files.createSymbolicLink(root.resolve("graft_link"), outside)
-      Artifacts.deleteTree(root)
-      assert(!Files.exists(root))
-      assert(Files.exists(outside), "a symlink's target must survive")
-      Artifacts.deleteTree(root) // already gone: no-op
-    } finally Files.deleteIfExists(outside)
+    withTempDir("graft_spec_root_") { root =>
+      val outside = Files.createTempFile("graft_spec_keep_", ".txt")
+      try {
+        val art = Files.createDirectories(root.resolve("graft_a_1/out/part=0"))
+        Files.write(art.resolve("f.parquet"), Array[Byte](0))
+        Files.write(root.resolve("graft_a_1/.f.parquet.crc"), Array[Byte](0))
+        Files.createSymbolicLink(root.resolve("graft_link"), outside)
+        Artifacts.deleteTree(root)
+        assert(!Files.exists(root))
+        assert(Files.exists(outside), "a symlink's target must survive")
+        Artifacts.deleteTree(root) // already gone: no-op
+      } finally Files.deleteIfExists(outside)
+    }
   }
 }

@@ -159,28 +159,30 @@ class Dsv2SourceSpec extends SparkSpec {
     // distributed parse job, and the contract holds at 10x the fixture's
     // slice count.
     import graft.sources.Tables
-    val out = java.nio.file.Files.createTempDirectory("dsv2_manyslices_").toString + "/events"
-    Tables.ensureNanosConf(spark)
-    EventsApi.withTsNanos(spark.read.parquet(s"$sf/events.parquet"))
-      .repartitionByRange(40, col("ts_nanos"))
-      .write.json(out)
-    EventsApi.writeStats(spark, out)
+    withTempDir("dsv2_manyslices_") { dir =>
+      val out = s"$dir/events"
+      Tables.ensureNanosConf(spark)
+      EventsApi.withTsNanos(spark.read.parquet(s"$sf/events.parquet"))
+        .repartitionByRange(40, col("ts_nanos"))
+        .write.json(out)
+      EventsApi.writeStats(spark, out)
 
-    val fsPath = new org.apache.hadoop.fs.Path(out, EventsApi.StatsDir)
-    val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val sidecars = fs.listStatus(fsPath).filter(_.getPath.getName.endsWith(".json"))
-    assert(sidecars.length === 40, s"expected one sidecar per slice, got ${sidecars.length}")
+      val fsPath = new org.apache.hadoop.fs.Path(out, EventsApi.StatsDir)
+      val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val sidecars = fs.listStatus(fsPath).filter(_.getPath.getName.endsWith(".json"))
+      assert(sidecars.length === 40, s"expected one sidecar per slice, got ${sidecars.length}")
 
-    val stats = EventsApi.readStats(out)
-    assert(stats.size === 40)
-    assert(stats.values.map(_.n).sum ===
-      spark.read.parquet(s"$sf/events.parquet").count())
-    // range-partitioned on ts_nanos => per-slice ts ranges are disjoint,
-    // so a point predicate must prune to exactly one slice
-    val someTs = stats.values.head.ranges("ts_nanos")._1
-    val survivors = stats.values.count(st =>
-      EventsApi.slicePossible(EqualTo("ts_nanos", someTs), st.ranges))
-    assert(survivors === 1, s"point predicate matched $survivors slices")
+      val stats = EventsApi.readStats(out)
+      assert(stats.size === 40)
+      assert(stats.values.map(_.n).sum ===
+        spark.read.parquet(s"$sf/events.parquet").count())
+      // range-partitioned on ts_nanos => per-slice ts ranges are disjoint,
+      // so a point predicate must prune to exactly one slice
+      val someTs = stats.values.head.ranges("ts_nanos")._1
+      val survivors = stats.values.count(st =>
+        EventsApi.slicePossible(EqualTo("ts_nanos", someTs), st.ranges))
+      assert(survivors === 1, s"point predicate matched $survivors slices")
+    }
   }
 
   test("the scan reports post-pruning statistics (rows + bytes)") {
@@ -306,28 +308,30 @@ class Dsv2SourceSpec extends SparkSpec {
 
   test("stream restart over the checkpoint replays nothing (offset round-trip)") {
     val landing = EventsApi.landing(spark, sf)
-    val out = java.nio.file.Files.createTempDirectory("dsv2_restart_out")
-    val ckpt = java.nio.file.Files.createTempDirectory("dsv2_restart_ckpt")
-    def drain(): Unit = {
-      val q = spark.readStream.format("graft-events")
-        .option("maxFilesPerMicroBatch", 2)
-        .load(landing)
-        .select("event_id")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
+    withTempDir("dsv2_restart_") { root =>
+      val out = java.nio.file.Files.createDirectory(root.resolve("out"))
+      val ckpt = java.nio.file.Files.createDirectory(root.resolve("ckpt"))
+      def drain(): Unit = {
+        val q = spark.readStream.format("graft-events")
+          .option("maxFilesPerMicroBatch", 2)
+          .load(landing)
+          .select("event_id")
+          .writeStream.format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination(120000)
+      }
+      drain()
+      val first = spark.read.parquet(out.toString).count()
+      // restart: initialOffset is read back via deserializeOffset — committed
+      // slices must not be re-emitted (exactly-once vs the reference's
+      // at-least-once replay double-count)
+      drain()
+      assert(spark.read.parquet(out.toString).count() === first)
+      assert(first === spark.read.parquet(s"$sf/events.parquet").count())
     }
-    drain()
-    val first = spark.read.parquet(out.toString).count()
-    // restart: initialOffset is read back via deserializeOffset — committed
-    // slices must not be re-emitted (exactly-once vs the reference's
-    // at-least-once replay double-count)
-    drain()
-    assert(spark.read.parquet(out.toString).count() === first)
-    assert(first === spark.read.parquet(s"$sf/events.parquet").count())
   }
 
   test("readStats is cached per (path, generation); rewrite invalidates") {
@@ -335,20 +339,21 @@ class Dsv2SourceSpec extends SparkSpec {
     // Spark job — at 100x landing reuse that is a job per query. The
     // instance-identity pin proves the second call returned the cache
     // (no recompute => no job); the rewrite proves staleness is impossible.
-    val out = java.nio.file.Files
-      .createTempDirectory("dsv2_statscache_").toString + "/events"
-    EventsApi.withTsNanos(spark.read.parquet(s"$sf/events.parquet"))
-      .repartitionByRange(4, col("ts_nanos"))
-      .write.json(out)
-    EventsApi.writeStats(spark, out)
-    val a = EventsApi.readStats(out)
-    val b = EventsApi.readStats(out)
-    assert(a eq b, "second readStats must hit the (path, generation) cache")
-    Thread.sleep(20) // mtime granularity: guarantee the rewrite ticks it
-    EventsApi.writeStats(spark, out)
-    val c = EventsApi.readStats(out)
-    assert(!(b eq c), "rewritten sidecars must invalidate the cached generation")
-    assert(b === c, "same landing content => same stats either way")
+    withTempDir("dsv2_statscache_") { dir =>
+      val out = s"$dir/events"
+      EventsApi.withTsNanos(spark.read.parquet(s"$sf/events.parquet"))
+        .repartitionByRange(4, col("ts_nanos"))
+        .write.json(out)
+      EventsApi.writeStats(spark, out)
+      val a = EventsApi.readStats(out)
+      val b = EventsApi.readStats(out)
+      assert(a eq b, "second readStats must hit the (path, generation) cache")
+      Thread.sleep(20) // mtime granularity: guarantee the rewrite ticks it
+      EventsApi.writeStats(spark, out)
+      val c = EventsApi.readStats(out)
+      assert(!(b eq c), "rewritten sidecars must invalidate the cached generation")
+      assert(b === c, "same landing content => same stats either way")
+    }
   }
 
   test("landing ts_nanos is numeric in the landed JSON (no silent string coercion)") {

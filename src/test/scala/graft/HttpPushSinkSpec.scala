@@ -109,14 +109,15 @@ class HttpPushSinkSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("id", "name").coalesce(1)
-    val q = HttpPushSink.writer(df, transport, maxAttempts = 5, baseDelayMs = 1)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("push_ckpt").toString)
-      .start()
-    try {
-      input.addData((1L, "a"), (2L, "b"))
-      q.processAllAvailable()
-    } finally q.stop()
+    withTempDir("push_ckpt") { ckpt =>
+      val q = HttpPushSink.writer(df, transport, maxAttempts = 5, baseDelayMs = 1)
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try {
+        input.addData((1L, "a"), (2L, "b"))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
 
     // two 503s then success: 3 attempts total, exactly one stored payload
     assert(attempts.get() === 3)

@@ -39,23 +39,25 @@ class LayoutSpec extends SparkSpec {
     // so only the tile-row intersecting b < 32 survives the stats check.
     val grid = (for (a <- 0 until 256; b <- 0 until 256) yield (a.toLong, b.toLong))
       .toDF("a", "b")
-    val root = java.nio.file.Files.createTempDirectory("layout").toString
-    Layout.zorderWrite(grid, col("a"), col("b"), s"$root/z", nFiles = 16)
-    grid.repartitionByRange(16, col("a")).sortWithinPartitions("a")
-      .write.mode("overwrite").parquet(s"$root/linear")
+    withTempDir("layout") { dir =>
+      val root = dir.toString
+      Layout.zorderWrite(grid, col("a"), col("b"), s"$root/z", nFiles = 16)
+      grid.repartitionByRange(16, col("a")).sortWithinPartitions("a")
+        .write.mode("overwrite").parquet(s"$root/linear")
 
-    // Files whose [min_b, max_b] intersects the predicate b < 32 — the
-    // exact set a stats-based reader must scan.
-    def filesHit(path: String): (Long, Long) = {
-      val perFile = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("b").as("b_min"), max("b").as("b_max"))
-      (perFile.filter(col("b_min") < 32).count(), perFile.count())
+      // Files whose [min_b, max_b] intersects the predicate b < 32 — the
+      // exact set a stats-based reader must scan.
+      def filesHit(path: String): (Long, Long) = {
+        val perFile = spark.read.parquet(path)
+          .groupBy(input_file_name().as("f"))
+          .agg(min("b").as("b_min"), max("b").as("b_max"))
+        (perFile.filter(col("b_min") < 32).count(), perFile.count())
+      }
+
+      val (zHit, zTotal) = filesHit(s"$root/z")
+      val (linHit, linTotal) = filesHit(s"$root/linear")
+      assert(linHit === linTotal, "linear layout cannot prune on b")
+      assert(zHit * 2 <= zTotal, s"z layout should prune: $zHit of $zTotal files hit")
     }
-
-    val (zHit, zTotal) = filesHit(s"$root/z")
-    val (linHit, linTotal) = filesHit(s"$root/linear")
-    assert(linHit === linTotal, "linear layout cannot prune on b")
-    assert(zHit * 2 <= zTotal, s"z layout should prune: $zHit of $zTotal files hit")
   }
 }

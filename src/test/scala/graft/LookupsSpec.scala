@@ -105,13 +105,15 @@ class LookupsSpec extends SparkSpec {
     // the scale property: no join, no shuffle — one codegen'd probe per row.
     // (a file-backed fact side: the local-relation form above constant-folds
     // into a LocalTableScan, which would make this assertion vacuous)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivl_plan_").toString
-    facts.write.mode("overwrite").parquet(tmp)
-    val onFiles = Lookups.networkName(spark.read.parquet(tmp), big, "ip", "n")
-    val plan = onFiles.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
-    assert(plan.contains("graft_interval_lookup"), plan)
-    assert(onFiles.orderBy("id").select("n").collect().map(_.getString(0)).toSeq === b)
+    withTempDir("graft_ivl_plan_") { dir =>
+      val tmp = dir.toString
+      facts.write.mode("overwrite").parquet(tmp)
+      val onFiles = Lookups.networkName(spark.read.parquet(tmp), big, "ip", "n")
+      val plan = onFiles.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+      assert(plan.contains("graft_interval_lookup"), plan)
+      assert(onFiles.orderBy("id").select("n").collect().map(_.getString(0)).toSeq === b)
+    }
   }
 
   test("flattenHierarchy resolves longest-prefix winners over disjoint intervals") {

@@ -46,28 +46,30 @@ class PlansSpec extends SparkSpec {
   }
 
   test("CidrRangeDerivation pushes bounds for annotated packed-IP columns") {
-    val path = java.nio.file.Files.createTempDirectory("cidr_push").toString
-    (0L until 4096L).map(i => i * 1048576L % 4294967296L).toDF("raw")
-      .select(col("raw").as("ip_long", Net.packedIpv4Metadata))
-      .write.mode("overwrite").parquet(path)
-    val (net, mask) = Net.parseCidr("10.0.0.0/8")
+    withTempDir("cidr_push") { tmp =>
+      val path = tmp.toString
+      (0L until 4096L).map(i => i * 1048576L % 4294967296L).toDF("raw")
+        .select(col("raw").as("ip_long", Net.packedIpv4Metadata))
+        .write.mode("overwrite").parquet(path)
+      val (net, mask) = Net.parseCidr("10.0.0.0/8")
 
-    def query() = spark.read.parquet(path)
-      .filter(col("ip_long").bitwiseAND(lit(mask)) === lit(net))
+      def query() = spark.read.parquet(path)
+        .filter(col("ip_long").bitwiseAND(lit(mask)) === lit(net))
 
-    val before = query().collect().map(_.getLong(0)).sorted
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ CidrRangeDerivation
-    try {
-      val plan = query().queryExecution.executedPlan.toString
-      assert(plan.contains("GreaterThanOrEqual(ip_long"), s"no pushed lower bound in:\n$plan")
-      assert(plan.contains("LessThanOrEqual(ip_long"), s"no pushed upper bound in:\n$plan")
-      val after = query().collect().map(_.getLong(0)).sorted
-      assert(after.toSeq === before.toSeq)
-      // idempotence: fixed-point optimizer batches must not stack bounds
-      val conds = "GreaterThanOrEqual\\(ip_long".r.findAllIn(plan).size
-      assert(conds <= 2, s"rule stacked duplicate bounds:\n$plan")
-    } finally spark.experimental.extraOptimizations = prev
+      val before = query().collect().map(_.getLong(0)).sorted
+      val prev = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = prev :+ CidrRangeDerivation
+      try {
+        val plan = query().queryExecution.executedPlan.toString
+        assert(plan.contains("GreaterThanOrEqual(ip_long"), s"no pushed lower bound in:\n$plan")
+        assert(plan.contains("LessThanOrEqual(ip_long"), s"no pushed upper bound in:\n$plan")
+        val after = query().collect().map(_.getLong(0)).sorted
+        assert(after.toSeq === before.toSeq)
+        // idempotence: fixed-point optimizer batches must not stack bounds
+        val conds = "GreaterThanOrEqual\\(ip_long".r.findAllIn(plan).size
+        assert(conds <= 2, s"rule stacked duplicate bounds:\n$plan")
+      } finally spark.experimental.extraOptimizations = prev
+    }
   }
 
   test("P7 START/STOP bounds reach the parquet scan natively (fixture ts)") {
@@ -91,17 +93,19 @@ class PlansSpec extends SparkSpec {
     // fires on the `timestamp_micros(x div 1000)` derivation normalizeTs
     // emits for LongType — so on native-timestamp fixtures it is inert and
     // the previous test's built-in pushdown takes over.
-    val path = java.nio.file.Files.createTempDirectory("nanos_push").toString
-    val base = 1704067200000000000L // 2024-01-01T00:00:00Z in nanos
-    (0L until 720L).map(i => base + i * 3600L * 1000000000L)
-      .toDF("ts").write.mode("overwrite").parquet(path)
-    def query() = graft.sources.Tables.normalizeTs(spark.read.parquet(path))
-      .filter(col("ts") >= lit("2024-01-10") && col("ts") < lit("2024-01-20"))
-    val plan = query().queryExecution.executedPlan.toString
-    assert(plan.contains("GreaterThanOrEqual(ts,"), s"no pushed lower bound:\n$plan")
-    assert(plan.contains("LessThanOrEqual(ts,"), s"no pushed upper bound:\n$plan")
-    // exact answer vs the arithmetic oracle: hours in [Jan 10, Jan 20)
-    assert(query().count() === 240L)
+    withTempDir("nanos_push") { tmp =>
+      val path = tmp.toString
+      val base = 1704067200000000000L // 2024-01-01T00:00:00Z in nanos
+      (0L until 720L).map(i => base + i * 3600L * 1000000000L)
+        .toDF("ts").write.mode("overwrite").parquet(path)
+      def query() = graft.sources.Tables.normalizeTs(spark.read.parquet(path))
+        .filter(col("ts") >= lit("2024-01-10") && col("ts") < lit("2024-01-20"))
+      val plan = query().queryExecution.executedPlan.toString
+      assert(plan.contains("GreaterThanOrEqual(ts,"), s"no pushed lower bound:\n$plan")
+      assert(plan.contains("LessThanOrEqual(ts,"), s"no pushed upper bound:\n$plan")
+      // exact answer vs the arithmetic oracle: hours in [Jan 10, Jan 20)
+      assert(query().count() === 240L)
+    }
   }
 
   test("CidrRangeDerivation never touches unannotated 64-bit columns") {

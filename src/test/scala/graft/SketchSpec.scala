@@ -125,19 +125,21 @@ class SketchSpec extends SparkSpec {
   test("bloom membership test stays a scan-side filter upstream of the join") {
     // A file-backed fact: over a LocalRelation the optimizer folds the
     // filter away entirely, which would hide the plan shape under test.
-    val dir = java.nio.file.Files.createTempDirectory("bloomplan").toString
-    (0 until 5000).map(_.toLong).toDF("key").write.mode("overwrite").parquet(dir)
-    val dim = (0 until 50).map(i => i * 7L).toDF("key")
-    val bm = Bloom.build(dim, col("key").cast("string"), k = 4, mBits = 1 << 16)
-    val fact = spark.read.parquet(dir)
-    val joined = fact.filter(Bloom.mightContain(col("key").cast("string"), bm, 4, 1 << 16))
-      .join(broadcast(dim), Seq("key"), "left_semi")
-    val plan = joined.queryExecution.executedPlan.toString
-    val filterAt = plan.indexOf("getbit")
-    val joinAt = plan.indexOf("BroadcastHashJoin")
-    assert(filterAt >= 0 && joinAt >= 0)
-    // Tree prints root-first: the join must appear before (above) the filter.
-    assert(joinAt < filterAt, "bloom test should sit below the join, on the scan side")
+    withTempDir("bloomplan") { tmp =>
+      val dir = tmp.toString
+      (0 until 5000).map(_.toLong).toDF("key").write.mode("overwrite").parquet(dir)
+      val dim = (0 until 50).map(i => i * 7L).toDF("key")
+      val bm = Bloom.build(dim, col("key").cast("string"), k = 4, mBits = 1 << 16)
+      val fact = spark.read.parquet(dir)
+      val joined = fact.filter(Bloom.mightContain(col("key").cast("string"), bm, 4, 1 << 16))
+        .join(broadcast(dim), Seq("key"), "left_semi")
+      val plan = joined.queryExecution.executedPlan.toString
+      val filterAt = plan.indexOf("getbit")
+      val joinAt = plan.indexOf("BroadcastHashJoin")
+      assert(filterAt >= 0 && joinAt >= 0)
+      // Tree prints root-first: the join must appear before (above) the filter.
+      assert(joinAt < filterAt, "bloom test should sit below the join, on the scan side")
+    }
   }
 
   test("count-min registers match an independent driver-side reference") {

@@ -18,8 +18,7 @@ class StatsLadderSpec extends SparkSpec {
 
   /** 5000 rows over ~5.6 days; uid cycles 0..96 so every day holds all
     * 97 distinct uids (>= K for non-null estimates). */
-  private def fixture(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ladder_").toString
+  private def fixture(root: String): String = {
     val raw = s"$root/events"
     val base = 1700000000000000L
     (0 until 5000).map { i =>
@@ -47,119 +46,127 @@ class StatsLadderSpec extends SparkSpec {
   }
 
   test("refreshStatsLadder(60/40 by event_id) == full rebuild on every rung, KMV states bit-identical") {
-    val raw = fixture()
-    val df = spark.read.parquet(raw)
-    val full = java.nio.file.Files.createTempDirectory("graft_ladder_full_").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft_ladder_incr_").toString
-    Rollup.buildStatsLadder(spark, df, ladderOf(full))
-    // event_id split: every hour bucket straddles the cut, so every
-    // stored partial takes the nontrivial old-merge-delta path
-    Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), ladderOf(incr))
-    Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), ladderOf(incr))
-    for (rung <- Seq("hourly", "daily", "monthly")) {
-      assert(rungRows(s"$incr/$rung") === rungRows(s"$full/$rung"),
-        s"rung $rung diverged from full rebuild")
+    withTempDir("graft_ladder_") { dir =>
+      val raw = fixture(dir.toString)
+      val df = spark.read.parquet(raw)
+      val full = s"$dir/full"
+      val incr = s"$dir/incr"
+      Rollup.buildStatsLadder(spark, df, ladderOf(full))
+      // event_id split: every hour bucket straddles the cut, so every
+      // stored partial takes the nontrivial old-merge-delta path
+      Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), ladderOf(incr))
+      Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), ladderOf(incr))
+      for (rung <- Seq("hourly", "daily", "monthly")) {
+        assert(rungRows(s"$incr/$rung") === rungRows(s"$full/$rung"),
+          s"rung $rung diverged from full rebuild")
+      }
     }
   }
 
   test("time-sliced delta touches only its partitions: untouched hourly day-dirs byte-identical") {
-    val raw = fixture()
-    val df = spark.read.parquet(raw)
-    val base = java.nio.file.Files.createTempDirectory("graft_ladder_tt_").toString
-    val cutTs = new java.sql.Timestamp(1700000000000L + 3 * 86400000L) // day 4+
-    Rollup.buildStatsLadder(spark, df.filter(col("ts") < lit(cutTs)), ladderOf(base))
-    // (path -> mtime): an unchanged mtime means the file was never
-    // rewritten, which is the O(touched) claim
-    def fileState(): Map[String, Long] = {
-      val root = new java.io.File(s"$base/hourly")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(root).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
+    withTempDir("graft_ladder_") { dir =>
+      val raw = fixture(dir.toString)
+      val df = spark.read.parquet(raw)
+      val base = s"$dir/tt"
+      val cutTs = new java.sql.Timestamp(1700000000000L + 3 * 86400000L) // day 4+
+      Rollup.buildStatsLadder(spark, df.filter(col("ts") < lit(cutTs)), ladderOf(base))
+      // (path -> mtime): an unchanged mtime means the file was never
+      // rewritten, which is the O(touched) claim
+      def fileState(): Map[String, Long] = {
+        val root = new java.io.File(s"$base/hourly")
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        walk(root).filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getPath -> f.lastModified()).toMap
+      }
+      val before = fileState()
+      Rollup.refreshStatsLadder(spark, df.filter(col("ts") >= lit(cutTs)), ladderOf(base))
+      val after = fileState()
+      val untouchedBefore = before.filter { case (p, _) =>
+        !df.filter(col("ts") >= lit(cutTs)) // delta days
+          .select(date_format(col("ts"), "yyyyMMdd")).distinct().collect()
+          .map(_.getString(0)).exists(d => p.contains(s"pkey=$d")) }
+      assert(untouchedBefore.nonEmpty, "fixture must leave some days untouched")
+      untouchedBefore.foreach { case (p, mtime) =>
+        assert(after.contains(p) && after(p) == mtime,
+          s"untouched partition file rewritten: $p") }
+      // and the refreshed store equals a full rebuild
+      val full = s"$dir/tt_full"
+      Rollup.buildStatsLadder(spark, df, ladderOf(full))
+      assert(rungRows(s"$base/hourly") === rungRows(s"$full/hourly"))
     }
-    val before = fileState()
-    Rollup.refreshStatsLadder(spark, df.filter(col("ts") >= lit(cutTs)), ladderOf(base))
-    val after = fileState()
-    val untouchedBefore = before.filter { case (p, _) =>
-      !df.filter(col("ts") >= lit(cutTs)) // delta days
-        .select(date_format(col("ts"), "yyyyMMdd")).distinct().collect()
-        .map(_.getString(0)).exists(d => p.contains(s"pkey=$d")) }
-    assert(untouchedBefore.nonEmpty, "fixture must leave some days untouched")
-    untouchedBefore.foreach { case (p, mtime) =>
-      assert(after.contains(p) && after(p) == mtime,
-        s"untouched partition file rewritten: $p") }
-    // and the refreshed store equals a full rebuild
-    val full = java.nio.file.Files.createTempDirectory("graft_ladder_tt_full_").toString
-    Rollup.buildStatsLadder(spark, df, ladderOf(full))
-    assert(rungRows(s"$base/hourly") === rungRows(s"$full/hourly"))
   }
 
   test("MULTI-MEASURE: both measures navigate in one aggregate; an unregistered measure stands the rewrite down") {
-    val raw = fixture()
-    val df = spark.read.parquet(raw)
-    val base = java.nio.file.Files.createTempDirectory("graft_ladder_mm_").toString
-    // uid as a SECOND measure (suffixed partials)
-    val L = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
-      extraMeasures = Seq("uid"))
-    def dash() = df
-      .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
-      .agg(sum("value").as("sv"), max("value").as("mv"),
-        sum("uid").as("su"), min("uid").as("mnu"), avg("uid").as("au"))
-    val truth = dash().collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2),
-        r.getDouble(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
-    try {
-      Rollup.buildStatsLadder(spark, df, L)
-      Rollup.registerStatsLadder(spark, df, L)
-      val q = dash()
-      val plan = q.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("ts#"), s"not navigated:\n$plan")
-      val got = q.collect()
+    withTempDir("graft_ladder_") { dir =>
+      val raw = fixture(dir.toString)
+      val df = spark.read.parquet(raw)
+      val base = s"$dir/mm"
+      // uid as a SECOND measure (suffixed partials)
+      val L = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
+        extraMeasures = Seq("uid"))
+      def dash() = df
+        .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
+        .agg(sum("value").as("sv"), max("value").as("mv"),
+          sum("uid").as("su"), min("uid").as("mnu"), avg("uid").as("au"))
+      val truth = dash().collect()
         .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2),
           r.getDouble(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
-      assert(got === truth)
-      // event_id is NOT a registered measure -> whole rewrite declines
-      val declined = df.groupBy(date_trunc("day", col("ts")).as("d"))
-        .agg(sum("value").as("sv"), sum("event_id").as("se"))
-      assert(declined.queryExecution.optimizedPlan.toString.contains("ts#"),
-        "an unregistered measure must stand the whole aggregate down")
-    } finally RollupNavigation.clear()
+      try {
+        Rollup.buildStatsLadder(spark, df, L)
+        Rollup.registerStatsLadder(spark, df, L)
+        val q = dash()
+        val plan = q.queryExecution.optimizedPlan.toString
+        assert(!plan.contains("ts#"), s"not navigated:\n$plan")
+        val got = q.collect()
+          .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2),
+            r.getDouble(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
+        assert(got === truth)
+        // event_id is NOT a registered measure -> whole rewrite declines
+        val declined = df.groupBy(date_trunc("day", col("ts")).as("d"))
+          .agg(sum("value").as("sv"), sum("event_id").as("se"))
+        assert(declined.queryExecution.optimizedPlan.toString.contains("ts#"),
+          "an unregistered measure must stand the whole aggregate down")
+      } finally RollupNavigation.clear()
+    }
   }
 
   test("refresh + registerStatsLadder re-arms navigation; navigated monthly dashboard == raw truth") {
-    val raw = fixture()
-    val df = spark.read.parquet(raw)
-    val base = java.nio.file.Files.createTempDirectory("graft_ladder_nav_").toString
-    val L = ladderOf(base)
-    def dash() = df
-      .groupBy(date_trunc("month", col("ts")).as("m"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("s"),
-        Kmv.kMinima(Hashing.md5Long(col("uid").cast("string")), K).as("mn"))
-    val truth = dash().collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3),
-        r.getSeq[Long](4).toList)).toSet
-    try {
-      Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), L)
-      Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), L)
-      Rollup.registerStatsLadder(spark, df, L)
-      val q = dash()
-      val plan = q.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("ts#") && plan.contains("kmv_minima"),
-        s"not navigated:\n$plan")
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val roots = q.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-      }.flatten
-      assert(roots.exists(_.contains("/monthly")),
-        s"monthly rung must serve a month query, scanned: $roots")
-      val got = q.collect()
+    withTempDir("graft_ladder_") { dir =>
+      val raw = fixture(dir.toString)
+      val df = spark.read.parquet(raw)
+      val base = s"$dir/nav"
+      val L = ladderOf(base)
+      def dash() = df
+        .groupBy(date_trunc("month", col("ts")).as("m"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum("value").as("s"),
+          Kmv.kMinima(Hashing.md5Long(col("uid").cast("string")), K).as("mn"))
+      val truth = dash().collect()
         .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3),
           r.getSeq[Long](4).toList)).toSet
-      assert(got === truth)
-    } finally RollupNavigation.clear()
+      try {
+        Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), L)
+        Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), L)
+        Rollup.registerStatsLadder(spark, df, L)
+        val q = dash()
+        val plan = q.queryExecution.optimizedPlan.toString
+        assert(!plan.contains("ts#") && plan.contains("kmv_minima"),
+          s"not navigated:\n$plan")
+        import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+        val roots = q.queryExecution.optimizedPlan.collect {
+          case lr: LogicalRelation => lr.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+            case _ => Seq.empty[String]
+          }
+        }.flatten
+        assert(roots.exists(_.contains("/monthly")),
+          s"monthly rung must serve a month query, scanned: $roots")
+        val got = q.collect()
+          .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3),
+            r.getSeq[Long](4).toList)).toSet
+        assert(got === truth)
+      } finally RollupNavigation.clear()
+    }
   }
 
   test("EXACT AVG (sum_q): navigated round(avg) is invariant under ladder rebuild perturbations") {
@@ -172,49 +179,51 @@ class StatsLadderSpec extends SparkSpec {
     // built the store. Fixture values are NON-dyadic 2-decimal (0.01
     // steps) — the double partials here genuinely drift under
     // re-association, so this test fails on the old contract.
-    val root = java.nio.file.Files.createTempDirectory("graft_ladder_q_").toString
-    val raw = s"$root/events"
-    val base = 1700000000000000L
-    (0 until 5000).map { i =>
-      (i.toLong, new java.sql.Timestamp(base / 1000 + i * 97000L),
-        if (i % 3 == 0) "view" else "purchase", ((i * 37) % 1000) / 100.0)
-    }.toDF("event_id", "ts", "event_type", "value")
-      .write.mode("overwrite").parquet(raw)
-    val df = spark.read.parquet(raw)
-    def dash() = df
-      .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
-      .agg(round(avg("value"), 2).as("av"), count(col("value")).as("n"))
-    def rows(q: org.apache.spark.sql.DataFrame) = q.collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
-    // ground truth via EXACT integer arithmetic, a third evaluation tree
-    val truth = df
-      .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
-      .agg(round(sum(round(col("value") * 100).cast("long")) / 100.0 /
-        count(col("value")), 2).as("av"), count(col("value")).as("n"))
-    def navigatedRows(ladder: Rollup.StatsLadder): Set[(java.sql.Timestamp, String, Double, Long)] =
-      try {
-        Rollup.registerStatsLadder(spark, df, ladder)
-        val q = dash()
-        val plan = q.queryExecution.optimizedPlan.toString
-        assert(plan.contains("sum_q"), s"AVG must ride the exact partial:\n$plan")
-        rows(q)
-      } finally RollupNavigation.clear()
-    // ladder A: plain build
-    val a = Rollup.StatsLadder(s"$root/a", "ts", "value", Seq("event_type"),
-      exactSumScale = Some(2))
-    Rollup.buildStatsLadder(spark, df, a)
-    // ladder B: perturbed plan — an extra registered measure widens the
-    // partial aggregate, AND the store is assembled as 60% build + 40%
-    // O(delta) refresh (every bucket straddles the event_id cut, so every
-    // partial takes the old⊕delta merge path)
-    val b = Rollup.StatsLadder(s"$root/b", "ts", "value", Seq("event_type"),
-      extraMeasures = Seq("event_id"), exactSumScale = Some(2))
-    Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), b)
-    Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), b)
-    val ra = navigatedRows(a)
-    val rb = navigatedRows(b)
-    assert(ra === rb, "navigated AVG changed across a ladder rebuild")
-    assert(ra === rows(truth), "navigated AVG differs from exact-arithmetic truth")
+    withTempDir("graft_ladder_q_") { dir =>
+      val root = dir.toString
+      val raw = s"$root/events"
+      val base = 1700000000000000L
+      (0 until 5000).map { i =>
+        (i.toLong, new java.sql.Timestamp(base / 1000 + i * 97000L),
+          if (i % 3 == 0) "view" else "purchase", ((i * 37) % 1000) / 100.0)
+      }.toDF("event_id", "ts", "event_type", "value")
+        .write.mode("overwrite").parquet(raw)
+      val df = spark.read.parquet(raw)
+      def dash() = df
+        .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
+        .agg(round(avg("value"), 2).as("av"), count(col("value")).as("n"))
+      def rows(q: org.apache.spark.sql.DataFrame) = q.collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
+      // ground truth via EXACT integer arithmetic, a third evaluation tree
+      val truth = df
+        .groupBy(date_trunc("day", col("ts")).as("d"), col("event_type"))
+        .agg(round(sum(round(col("value") * 100).cast("long")) / 100.0 /
+          count(col("value")), 2).as("av"), count(col("value")).as("n"))
+      def navigatedRows(ladder: Rollup.StatsLadder): Set[(java.sql.Timestamp, String, Double, Long)] =
+        try {
+          Rollup.registerStatsLadder(spark, df, ladder)
+          val q = dash()
+          val plan = q.queryExecution.optimizedPlan.toString
+          assert(plan.contains("sum_q"), s"AVG must ride the exact partial:\n$plan")
+          rows(q)
+        } finally RollupNavigation.clear()
+      // ladder A: plain build
+      val a = Rollup.StatsLadder(s"$root/a", "ts", "value", Seq("event_type"),
+        exactSumScale = Some(2))
+      Rollup.buildStatsLadder(spark, df, a)
+      // ladder B: perturbed plan — an extra registered measure widens the
+      // partial aggregate, AND the store is assembled as 60% build + 40%
+      // O(delta) refresh (every bucket straddles the event_id cut, so every
+      // partial takes the old⊕delta merge path)
+      val b = Rollup.StatsLadder(s"$root/b", "ts", "value", Seq("event_type"),
+        extraMeasures = Seq("event_id"), exactSumScale = Some(2))
+      Rollup.buildStatsLadder(spark, df.filter(col("event_id") < 3000), b)
+      Rollup.refreshStatsLadder(spark, df.filter(col("event_id") >= 3000), b)
+      val ra = navigatedRows(a)
+      val rb = navigatedRows(b)
+      assert(ra === rb, "navigated AVG changed across a ladder rebuild")
+      assert(ra === rows(truth), "navigated AVG differs from exact-arithmetic truth")
+    }
   }
 
   test("two ladders sharing an hourly path do not cross-memo: the second config re-derives and replaces") {
@@ -225,35 +234,37 @@ class StatsLadderSpec extends SparkSpec {
     // B (same base, no extra measure) must re-derive — after
     // registerStatsLadder(B), a sum(uid) dashboard stands down to the raw
     // scan while sum(value) still navigates.
-    val raw = fixture()
-    val df = spark.read.parquet(raw)
-    val base = java.nio.file.Files.createTempDirectory("graft_ladder_xmemo_").toString
-    val a = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
-      extraMeasures = Seq("uid"))
-    // the store is built ONCE with A's schema (superset of B's needs):
-    // only the registration configs differ, which is exactly the
-    // cross-memo hazard — no store mutation ever invalidates the memo
-    Rollup.buildStatsLadder(spark, df, a)
-    def uidDash() = df.groupBy(date_trunc("day", col("ts")).as("d"))
-      .agg(sum("uid").as("su"))
-    def valueDash() = df.groupBy(date_trunc("day", col("ts")).as("d"))
-      .agg(sum("value").as("sv"))
-    try {
-      Rollup.registerStatsLadder(spark, df, a)
-      assert(!uidDash().queryExecution.optimizedPlan.toString.contains("ts#"),
-        "ladder A must navigate the uid measure")
-      val b = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"))
-      Rollup.registerStatsLadder(spark, df, b)
-      assert(uidDash().queryExecution.optimizedPlan.toString.contains("ts#"),
-        "after registering ladder B (no uid measure) at the same path, " +
-          "a uid dashboard must stand down — a memo hit here is the " +
-          "cross-memo bug")
-      assert(!valueDash().queryExecution.optimizedPlan.toString.contains("ts#"),
-        "ladder B's own measure must still navigate")
-      // and B itself is now memoized: a second register is a no-op hit
-      // (same identity, live keys) — this is the memo's fast path
-      Rollup.registerStatsLadder(spark, df, b)
-      assert(!valueDash().queryExecution.optimizedPlan.toString.contains("ts#"))
-    } finally RollupNavigation.clear()
+    withTempDir("graft_ladder_") { dir =>
+      val raw = fixture(dir.toString)
+      val df = spark.read.parquet(raw)
+      val base = s"$dir/xmemo"
+      val a = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
+        extraMeasures = Seq("uid"))
+      // the store is built ONCE with A's schema (superset of B's needs):
+      // only the registration configs differ, which is exactly the
+      // cross-memo hazard — no store mutation ever invalidates the memo
+      Rollup.buildStatsLadder(spark, df, a)
+      def uidDash() = df.groupBy(date_trunc("day", col("ts")).as("d"))
+        .agg(sum("uid").as("su"))
+      def valueDash() = df.groupBy(date_trunc("day", col("ts")).as("d"))
+        .agg(sum("value").as("sv"))
+      try {
+        Rollup.registerStatsLadder(spark, df, a)
+        assert(!uidDash().queryExecution.optimizedPlan.toString.contains("ts#"),
+          "ladder A must navigate the uid measure")
+        val b = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"))
+        Rollup.registerStatsLadder(spark, df, b)
+        assert(uidDash().queryExecution.optimizedPlan.toString.contains("ts#"),
+          "after registering ladder B (no uid measure) at the same path, " +
+            "a uid dashboard must stand down — a memo hit here is the " +
+            "cross-memo bug")
+        assert(!valueDash().queryExecution.optimizedPlan.toString.contains("ts#"),
+          "ladder B's own measure must still navigate")
+        // and B itself is now memoized: a second register is a no-op hit
+        // (same identity, live keys) — this is the memo's fast path
+        Rollup.registerStatsLadder(spark, df, b)
+        assert(!valueDash().queryExecution.optimizedPlan.toString.contains("ts#"))
+      } finally RollupNavigation.clear()
+    }
   }
 }

@@ -111,30 +111,32 @@ class StreamingRollupSpec extends SparkSpec {
 
   test("T5 backpressure: maxFilesPerTrigger bounds every micro-batch's input") {
     import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("bp_in")
-    val out = java.nio.file.Files.createTempDirectory("bp_out")
-    val ckpt = java.nio.file.Files.createTempDirectory("bp_ckpt")
-    // a 5-file backlog, 3 rows each — a restart-into-backlog shape
-    for (f <- 0 until 5) {
-      java.nio.file.Files.writeString(in.resolve(s"drop$f.json"),
-        (0 until 3).map(i => s"""{"k": "f$f-$i", "v": ${f * 10 + i}}""")
-          .mkString("\n"))
+    withTempDir("bp_") { root =>
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val out = java.nio.file.Files.createDirectory(root.resolve("out"))
+      val ckpt = java.nio.file.Files.createDirectory(root.resolve("ckpt"))
+      // a 5-file backlog, 3 rows each — a restart-into-backlog shape
+      for (f <- 0 until 5) {
+        java.nio.file.Files.writeString(in.resolve(s"drop$f.json"),
+          (0 until 3).map(i => s"""{"k": "f$f-$i", "v": ${f * 10 + i}}""")
+            .mkString("\n"))
+      }
+      val schema = StructType(Seq(
+        StructField("k", StringType), StructField("v", LongType)))
+      val src = graft.streaming.StreamingRollup.jsonFileSource(
+        spark, in.toString, schema, maxFilesPerTrigger = Some(1))
+      val q = src.writeStream
+        .format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      val batches = q.recentProgress.map(_.numInputRows).filter(_ > 0)
+      // the backlog drained as >= 5 bounded batches, never one unbounded one
+      assert(batches.length >= 5, batches.mkString(","))
+      assert(batches.forall(_ <= 3), batches.mkString(","))
+      assert(spark.read.parquet(out.toString).count() === 15)
     }
-    val schema = StructType(Seq(
-      StructField("k", StringType), StructField("v", LongType)))
-    val src = graft.streaming.StreamingRollup.jsonFileSource(
-      spark, in.toString, schema, maxFilesPerTrigger = Some(1))
-    val q = src.writeStream
-      .format("parquet")
-      .option("path", out.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val batches = q.recentProgress.map(_.numInputRows).filter(_ > 0)
-    // the backlog drained as >= 5 bounded batches, never one unbounded one
-    assert(batches.length >= 5, batches.mkString(","))
-    assert(batches.forall(_ <= 3), batches.mkString(","))
-    assert(spark.read.parquet(out.toString).count() === 15)
   }
 }
