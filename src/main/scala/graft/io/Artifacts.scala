@@ -15,12 +15,17 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * Every artifact directory is `graft_<name>_…` under a single root in
   * `java.io.tmpdir`, created on first use and deleted by a JVM shutdown
-  * hook, so a run leaves nothing behind in the temp dir. Nothing is
-  * invalidated within a JVM: no caller rewrites a fixture in place.
+  * hook, so a run leaves nothing behind in the temp dir. An artifact
+  * landed with an `input` fingerprint is landed again, into a new
+  * directory, when its input changes; the rest are never invalidated
+  * within a JVM.
   */
 object Artifacts {
 
-  private val landed = TrieMap.empty[(String, String), String]
+  /** Leaf files an artifact derives from, as (path, length, mtime). */
+  type Input = Seq[(String, Long, Long)]
+
+  private val landed = TrieMap.empty[(String, String, Input), String]
 
   private[graft] lazy val root: Path = {
     val r = Files.createTempDirectory("graft_artifacts_")
@@ -30,9 +35,11 @@ object Artifacts {
   }
 
   /** The landed path of artifact `name` over fixture `dir`: on first call
-    * `build` fills a fresh, empty `graft_<name>_…` directory. */
-  def land(name: String, dir: String)(build: String => Unit): String =
-    landed.getOrElseUpdate((name, dir), {
+    * `build` fills a fresh, empty `graft_<name>_…` directory. With an
+    * `input` listing, a changed listing builds into a new directory; the
+    * superseded one stays until the JVM exits. */
+  def land(name: String, dir: String, input: Input = Nil)(build: String => Unit): String =
+    landed.getOrElseUpdate((name, dir, input), {
       val out = Files.createTempDirectory(root, s"graft_${name}_").toString
       build(out)
       out
@@ -60,8 +67,8 @@ object Artifacts {
   private[graft] def rebind(name: String, dir: String,
                             path: Option[String]): Option[String] =
     path match {
-      case Some(p) => landed.put((name, dir), p)
-      case None => landed.remove((name, dir))
+      case Some(p) => landed.put((name, dir, Nil), p)
+      case None => landed.remove((name, dir, Nil))
     }
 
   /** Delete `p` and everything under it without following symlinks; what

@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.io.Artifacts
+import graft.sources.Tables
 
 /** Deterministic security-event enrichment of the synthetic `events` table.
   *
@@ -13,6 +16,16 @@ import org.apache.spark.sql.functions._
   * is expressible identically in Spark and ANSI SQL. `sqlCte` below is the
   * DuckDB-side mirror of `securityEvents` — the two MUST stay in sync
   * (the driver's hash-compare enforces it every round).
+  *
+  * Queries read the derived columns as STORED columns, the way the
+  * reference's ETL lands its report fields before ClickHouse serves them
+  * (reference: clickhouse/helpers.py:11-128, clickhouse/clickhouse.py:70-81):
+  * [[landed]] runs `securityEvents` once per fixture `events` file listing
+  * and lands the result as parquet, so no query re-analyzes, re-plans or
+  * re-evaluates the 20 expressions. `sqlCte` stays the oracle's
+  * independent mirror: DuckDB re-derives every column from the raw
+  * fixture, so a landing that drifted from the derivation fails the
+  * hash-compare.
   *
   * Column semantics (AQL analog in parens):
   *  - source_ip / destination_ip (sourceip/destinationip): mix of RFC1918,
@@ -27,7 +40,25 @@ object Enrich {
 
   private def s(c: Column): Column = c.cast("string")
 
-  /** Spark-side derivation. Keep in lock-step with [[sqlCte]]. */
+  /** The enriched events table of fixture `dir`, read from its landing
+    * (see [[landedPath]]) with the memoized schema: a warm call runs no
+    * Spark job. */
+  def landed(spark: SparkSession, dir: String): DataFrame =
+    Tables.readPath(spark, landedPath(spark, dir))
+
+  /** Where `securityEvents(Tables.events(spark, dir))` is landed as
+    * parquet: written on the first call per `events` leaf listing (path,
+    * length, mtime), so a rewritten `events.parquet` lands again. The
+    * write keeps the scan's own partitioning, one file per input split. */
+  def landedPath(spark: SparkSession, dir: String): String = {
+    val events = s"$dir/events.parquet"
+    Artifacts.land("security_events", dir, Tables.listing(spark, events).getOrElse(Nil)) {
+      out => securityEvents(Tables.events(spark, dir)).write.mode("overwrite").parquet(out)
+    }
+  }
+
+  /** Spark-side derivation, run by [[landedPath]] (and from raw rows by
+    * the ladder stress). Keep in lock-step with [[sqlCte]]. */
   def securityEvents(events: DataFrame): DataFrame = {
     val e = col("event_id")
     val u = col("user_id")

@@ -17,7 +17,7 @@ import graft.sources.Tables
 object EventQueries {
 
   private def se(spark: SparkSession, dir: String): DataFrame =
-    Enrich.securityEvents(Tables.events(spark, dir))
+    Enrich.landed(spark, dir)
 
   /** k of the ladder's KMV distinct-user sketch (every day×type group in
     * the fixture holds ≥ 42 distinct users, so estimates never null). */

@@ -91,7 +91,7 @@ object ViewQueries {
     * this JVM. */
   private def store(s: SparkSession, dir: String): String =
     graft.io.Artifacts.land("views", dir) { root =>
-      val ev = Enrich.securityEvents(Tables.events(s, dir))
+      val ev = Enrich.landed(s, dir)
       definitions.foreach { case (name, build) =>
         Rollup.writePartitionedByDay(build(ev), "hour", s"$root/$name")
       }

@@ -27,7 +27,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.schema(schema(spark, dir, table)).parquet(s"$dir/$table.parquet")
+    readPath(spark, s"$dir/$table.parquet")
+
+  /** Any parquet path (a fixture table or a landed artifact), opened with
+    * its memoized schema: a warm open runs no Spark job. */
+  def readPath(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   /** The session confs that change what parquet schema inference returns:
     * the ones Spark 4.1's `ParquetToSparkSchemaConverter(SQLConf)` reads
@@ -51,21 +56,29 @@ object Tables {
   private val schemas =
     TrieMap.empty[(String, Seq[(String, Long, Long)], Seq[Option[String]]), StructType]
 
-  /** The schema `spark.read.parquet` infers for `table`, inferred once per
-    * file listing and conf state in this JVM. The listing comes from the
+  /** The schema `spark.read.parquet` infers for `table`; see [[schemaOf]]. */
+  def schema(spark: SparkSession, dir: String, table: String): StructType =
+    schemaOf(spark, s"$dir/$table.parquet")
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per file
+    * listing and conf state in this JVM. The listing comes from the
     * Hadoop FileSystem, so a hit runs no Spark job; a rewritten or
-    * re-configured table misses and is inferred again. */
-  def schema(spark: SparkSession, dir: String, table: String): StructType = {
-    val path = s"$dir/$table.parquet"
-    val p = new Path(path)
-    val listing =
-      try Some(leafFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
-      catch { case _: FileNotFoundException => None }
-    // a missing table falls through to the stock reader and its own error
-    listing.fold(spark.read.parquet(path).schema) { files =>
+    * re-configured path misses and is inferred again. */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    // a missing path falls through to the stock reader and its own error
+    listing(spark, path).fold(spark.read.parquet(path).schema) { files =>
       schemas.getOrElseUpdate((path, files, schemaConfs.map(spark.conf.getOption)),
         spark.read.parquet(path).schema)
     }
+
+  /** The leaf files under `path` as (path, length, mtime), sorted, read
+    * from the Hadoop FileSystem (no Spark job); None if `path` is missing.
+    * The schema memo's key, and the input fingerprint of artifacts
+    * derived from a table (see [[graft.queries.Enrich.landedPath]]). */
+  def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    try Some(leafFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+    catch { case _: FileNotFoundException => None }
   }
 
   private def leafFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =

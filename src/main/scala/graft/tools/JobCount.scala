@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -53,9 +54,9 @@ object JobCount {
       val t0 = System.nanoTime()
       val n = fn(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are async — give the bus a beat to drain before
-      // freezing the counters (listenerBus is private[spark])
-      Thread.sleep(300)
+      // listener events are async: drain the bus before freezing the
+      // counters, so late stage and task events are counted on a loaded box
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
       recording = false
       println(f"JOBCOUNT $name%-28s jobs=${jobs.get}%3d stages=${stages.get}%4d " +
         f"tasks=${tasks.get}%5d task_sec=${taskMs.get / 1000.0}%8.2f " +

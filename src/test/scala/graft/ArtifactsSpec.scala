@@ -37,6 +37,22 @@ class ArtifactsSpec extends SparkSpec {
     assert(Set(a, b, c).size === 3)
   }
 
+  test("a changed input listing builds again; an unchanged one is served the memo") {
+    val dir = freshDir()
+    val builds = new AtomicInteger
+    def land(input: Artifacts.Input) =
+      Artifacts.land("spec_input", dir, input)(_ => builds.incrementAndGet())
+    val v1 = Seq(("file:/f/part-0", 10L, 100L))
+    val first = land(v1)
+    assert(land(v1) === first)
+    assert(builds.get === 1)
+    val rewritten = land(Seq(("file:/f/part-0", 10L, 200L)))
+    assert(rewritten !== first)
+    assert(builds.get === 2)
+    // the input-free artifact of the same (name, dir) is a separate entry
+    assert(Set(first, rewritten).contains(land(Nil)) === false)
+  }
+
   test("every artifact sits under the one root with its graft_<name>_ prefix") {
     val dir = freshDir()
     val root = Artifacts.root

@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths, Path => NioPath}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -8,11 +11,14 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.LongType
 
-import graft.queries.Enrich
+import graft.io.Artifacts
+import graft.queries.{Enrich, EventQueries, ViewQueries}
 import graft.sources.Tables
 
 /** S4/S5: dynamic-schema JSON ingestion — the schema must be the UNION over
@@ -20,6 +26,9 @@ import graft.sources.Tables
   * (reference clickhouse/helpers.py:166-169 silently drops keys that first
   * appear in later rows). Plus the parquet schema catalog behind
   * `Tables.read`: memoized per file listing and conf state, never stale.
+  * Plus the security-event landing every `events` query reads
+  * (`Enrich.landed`): equal to the derivation, landed once per `events`
+  * listing, shared by all callers.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -51,6 +60,8 @@ class TablesSpec extends SparkSpec {
       assert(df.columns.toSeq === Seq("id"))
     }
   }
+
+  private val sf = "/root/testdata/sf0.01"
 
   /** Spark jobs started while `body` runs, counted after the listener bus
     * has delivered every event (before and after). */
@@ -121,7 +132,6 @@ class TablesSpec extends SparkSpec {
   }
 
   test("every sf0.01 fixture table's memoized schema equals stock inference") {
-    val sf = "/root/testdata/sf0.01"
     Tables.ensureNanosConf(spark)
     val present = Tables.names.filter(t => new java.io.File(s"$sf/$t.parquet").exists)
     assert(present.nonEmpty)
@@ -149,6 +159,69 @@ class TablesSpec extends SparkSpec {
         case Project(_, _: LogicalRelation) =>
         case other => fail(s"expected one Project over the relation:\n$other")
       }
+    }
+  }
+
+  private def copyEvents(to: NioPath): Unit =
+    Files.copy(Paths.get(s"$sf/events.parquet"), to.resolve("events.parquet"))
+
+  private def securityLandings: Set[NioPath] = {
+    val ls = Files.list(Artifacts.root)
+    try ls.iterator.asScala.filter(_.getFileName.toString.startsWith("graft_security_events_")).toSet
+    finally ls.close()
+  }
+
+  test("the landed security events equal the derivation at sf0.01") {
+    Tables.ensureNanosConf(spark)
+    val landed = Enrich.landed(spark, sf)
+    val derived = Enrich.securityEvents(Tables.events(spark, sf))
+    assert(landed.schema.map(f => (f.name, f.dataType)) ===
+      derived.schema.map(f => (f.name, f.dataType)))
+    assert(landed.exceptAll(derived).isEmpty)
+    assert(derived.exceptAll(landed).isEmpty)
+    assert(landed.count() > 0)
+  }
+
+  test("a second security-event query build reads the same landing and runs no Spark job") {
+    val q = EventQueries.queries("q_p7_timerange")
+    q(spark, sf)
+    val path = Enrich.landedPath(spark, sf)
+    var again: DataFrame = null
+    assert(jobsDuring { again = q(spark, sf) } === 0)
+    assert(Enrich.landedPath(spark, sf) === path)
+    assert(again.inputFiles.nonEmpty)
+    assert(again.inputFiles.forall(_.contains(path)), again.inputFiles.toSeq)
+  }
+
+  test("a rewritten events.parquet is landed again into a new directory") {
+    withTempDir("graft_landing_") { d =>
+      val dir = d.toString
+      copyEvents(d)
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val first = Enrich.landedPath(spark, dir)
+      assert(Enrich.landed(spark, dir).count() === raw.count())
+      val fewer = raw.filter(col("event_id") % 3 === 0)
+      fewer.write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val second = Enrich.landedPath(spark, dir)
+      assert(second !== first)
+      assert(Enrich.landed(spark, dir).count() === fewer.count())
+      assert(fewer.count() < raw.count())
+    }
+  }
+
+  test("an EventQueries query and a ViewQueries view over one dir share one landing") {
+    withTempDir("graft_landing_") { d =>
+      val dir = d.toString
+      copyEvents(d)
+      val before = securityLandings
+      val view = ViewQueries.globalView(spark, dir, "UBA")
+      val added = securityLandings -- before
+      assert(added.size === 1)
+      val q = EventQueries.queries("q_p7_timerange")(spark, dir)
+      assert(securityLandings -- before === added)
+      assert(Enrich.landedPath(spark, dir) === added.head.toString)
+      assert(q.inputFiles.forall(_.contains(added.head.toString)), q.inputFiles.toSeq)
+      assert(view.count() > 0 && q.count() > 0)
     }
   }
 }
