@@ -25,7 +25,7 @@ object IndexStress {
     import spark.implicits._
 
     def tmp(prefix: String): String =
-      Files.createTempDirectory(prefix).toString
+      Files.createTempDirectory(graft.io.Artifacts.root, prefix).toString
 
     def timeIt(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

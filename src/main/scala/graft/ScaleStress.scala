@@ -166,7 +166,8 @@ object ScaleStress {
     // the replica token tag is two base-26 letters — beyond 26*26 a third
     // digit would be needed and the tag would silently stop being letters
     require(replicas <= 676, s"replicas=$replicas exceeds the 2-letter base-26 tag space (676)")
-    val out = java.nio.file.Files.createTempDirectory("graft_scale10_").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(graft.io.Artifacts.root, "graft_scale10_").toString
     val docs = Tables.documents(spark, src)
     val maxDoc = docs.agg(max("doc_id")).head().getLong(0) + 1
     val reps = spark.range(replicas).select(col("id").as("rep"))

@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * Every artifact directory is `graft_<name>_…` under a single root in
   * `java.io.tmpdir`, created on first use and deleted by a JVM shutdown
-  * hook, so a run leaves nothing behind in the temp dir. An artifact
+  * hook, so a run leaves nothing behind in the temp dir (the stress
+  * mains keep their scratch trees under the same root). An artifact
   * landed with an `input` fingerprint is landed again, into a new
   * directory, when its input changes; the rest are never invalidated
   * within a JVM.

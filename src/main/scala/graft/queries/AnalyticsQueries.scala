@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.io.Artifacts
 import graft.ops.Sampling
 import graft.sources.Tables
+import graft.streaming.JsonTopic
 
 /** Behavioral/product-analytics surface: cohort retention, SCD2 history
   * expansion, Markov transition matrices, and market-basket association
@@ -1069,50 +1070,9 @@ object AnalyticsQueries {
       |    AS score
       |FROM w GROUP BY 1""".stripMargin
 
-  /** A JSON-lines topic in `dir` that the file source replays in write
-    * order: each `append` lands its frame as ONE file and pins a strictly
-    * increasing mtime on it, so the mtime ordering is deterministic even
-    * on filesystems with coarse (e.g. 1 s) timestamp granularity.
-    * Appends are spaced 60 s apart (well inside the source's maxFileAge
-    * window).
-    */
-  private final class OrderedTopic(dir: String) {
-    private val seen = scala.collection.mutable.Set.empty[String]
-    private val base = System.currentTimeMillis() - 600000L
-    private var batch = 0
-
-    def append(df: DataFrame): Unit = {
-      df.select(to_json(struct(df.columns.toSeq.map(col): _*)).as("value"))
-        .coalesce(1).write.mode("append").text(dir)
-      val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      files.filter(f => f.isFile && !seen.contains(f.getPath)).foreach { f =>
-        require(f.setLastModified(base + batch * 60000L),
-          s"OrderedTopic: cannot set mtime on ${f.getPath}")
-        seen.add(f.getPath)
-      }
-      batch += 1
-    }
-
-    /** Append `ev` as four `t_us`-ranged slices, oldest first (the
-      * per-key time order a user-keyed Kafka topic guarantees); returns
-      * the topic's max `t_us`. */
-    def appendTimeSlices(ev: DataFrame): Long = {
-      val r = ev.agg(min("t_us"), max("t_us")).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val step = math.max(1L, (hi - lo) / 4 + 1)
-      (0 until 4).foreach { i =>
-        append(ev.filter(col("t_us") >= lo + i * step &&
-            col("t_us") < lo + (i + 1) * step || lit(i == 3) &&
-            col("t_us") >= lo + 4 * step)
-          .orderBy("t_us"))
-      }
-      hi
-    }
-  }
-
   /** Landing for q_t21_streaming_leftjoin: purchases LEFT OUTER signups
     * within a backward 1-hour window. The topic lands as THREE
-    * sequentially-written files (mtime-ordered at maxFilesPerTrigger=1):
+    * sequentially-written files (an ordered [[JsonTopic]]):
     * all real events, then two sentinel batches 30/60 days past the data
     * — the first advances the watermark so every real unmatched purchase
     * emits during the second. Sentinel keys are negative and filtered on
@@ -1125,18 +1085,14 @@ object AnalyticsQueries {
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"))
       val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      val topic = new OrderedTopic(src)
-      topic.append(ev)
+      val topic = JsonTopic(src).append(ev)
       Seq(30L, 60L).foreach { d =>
         val t = maxUs + d * 86400000000L
         topic.append(s.createDataFrame(Seq((-1L, "purchase", t), (-2L, "signup", t)))
           .toDF("user_id", "event_type", "ts_us"))
       }
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, ts_us BIGINT")
       def side(t: String, key: String, ts: String) =
-        graft.streaming.KafkaSource.decodeJson(
-            s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+        topic.stream()
           .filter(col("event_type") === t)
           .select(col("user_id").as(key),
             timestamp_micros(col("ts_us")).as(ts))
@@ -1156,14 +1112,8 @@ object AnalyticsQueries {
   private def streamedDayRegisters(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_wau", dir, OutputMode.Update) { src =>
       import graft.functions.{Hashing, Hll}
-      Tables.events(s, dir)
-        .select(to_json(struct(col("user_id"),
-          unix_micros(col("ts")).as("ts_us"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, ts_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(Tables.events(s, dir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))).stream()
       val h = Hashing.md5Long(col("user_id").cast("string"))
       decoded
         .select(expr("ts_us div 86400000000").as("day"),
@@ -1189,15 +1139,9 @@ object AnalyticsQueries {
     concat(col("event_type"), lit("#"), expr("CAST(k div 10 AS STRING)"))
   private def streamedDayHeavyCandidates(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_trendheavy", dir, OutputMode.Update) { src =>
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_type"),
-          unix_micros(col("ts")).as("ts_us"), col("props"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, ts_us BIGINT, props STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.events(s, dir)
+          .select(col("event_type"), unix_micros(col("ts")).as("ts_us"), col("props")))
+        .stream()
         .withColumn("k", expr("from_json(props, 'k BIGINT').k"))
         .filter(col("k").isNotNull)
         .select(topicCol.as("topic"), expr("ts_us div 86400000000").as("day"))
@@ -1221,18 +1165,10 @@ object AnalyticsQueries {
     */
   private def streamedUpsertState(s: SparkSession, dir: String): String =
     Artifacts.land("stream_upsert", dir) { root =>
-      val src = s"$root/src"
-      Tables.events(s, dir)
-        .select(to_json(struct(col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"),
-          col("event_id"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, ts_us BIGINT, event_type STRING, " +
-          "cents BIGINT, event_id BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(s"$root/src").write(Tables.events(s, dir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"),
+          round(col("value") * 100).cast("long").as("cents"), col("event_id")))
+        .stream()
       graft.streaming.UpsertSink.availableNow(decoded, s"$root/state",
         s"$root/ckpt", keyCol = "user_id", orderCols = Seq("ts_us", "event_id"))
     } + "/state"
@@ -1252,16 +1188,12 @@ object AnalyticsQueries {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
       val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      val topic = new OrderedTopic(src)
-      topic.append(ev)
+      val topic = JsonTopic(src).append(ev)
       Seq(30L, 60L).foreach { d =>
         topic.append(s.createDataFrame(Seq((-1L, maxUs + d * 86400000000L)))
           .toDF("user_id", "ts_us"))
       }
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, ts_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-          s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = topic.stream()
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
       decoded.withWatermark("ts", "1 hour")
         .groupBy(col("user_id"),
@@ -1285,16 +1217,12 @@ object AnalyticsQueries {
     val out = Artifacts.drain("stream_beacon", dir, OutputMode.Update) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"),
         unix_micros(col("ts")).as("t_us"), col("event_id"))
-      val topic = new OrderedTopic(src)
+      val topic = JsonTopic(src)
       val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): flush the sub-ms tail
       // the ms-granularity watermark can never pass; filtered on read
-      topic.append(s.createDataFrame(Seq((-1L, hi + 86400000000L, 0L)))
-        .toDF("user_id", "t_us", "event_id"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, t_us BIGINT, event_id BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = topic.append(s.createDataFrame(Seq((-1L, hi + 86400000000L, 0L)))
+        .toDF("user_id", "t_us", "event_id")).stream()
       // idle-TTL sized past the fixture topic's span (the detection
       // window here is the whole topic): state stays bounded by contract,
       // nothing expires mid-stream, oracle unchanged. The expiry path is
@@ -1313,15 +1241,9 @@ object AnalyticsQueries {
     */
   private def streamedTypeDayCounts(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_trend", dir, OutputMode.Update) { src =>
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_type"),
-          unix_micros(col("ts")).as("ts_us"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, ts_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.events(s, dir)
+          .select(col("event_type"), unix_micros(col("ts")).as("ts_us")))
+        .stream()
         .select(col("event_type"), expr("ts_us div 86400000000").as("day"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
     }
@@ -1358,19 +1280,15 @@ object AnalyticsQueries {
     val out = Artifacts.drain("stream_firstseen", dir, OutputMode.Append) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t_us"))
-      val topic = new OrderedTopic(src)
+      val topic = JsonTopic(src)
       val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): the buffered fold
       // releases events only once the ms-granularity watermark passes
       // them, and the watermark can never pass the topic's own max
       // event — a negative-keyed far-future row advances it so the tail
       // flushes; filtered on read
-      topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
-        .toDF("user_id", "event_type", "t_us"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, t_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
+        .toDF("user_id", "event_type", "t_us")).stream()
       // novelty horizon sized past the topic span: streamed == all-time
       // batch first-seen (the TTL contract is "first seen within the
       // horizon"; expiry is pinned in StreamingTtlSpec)
@@ -1392,16 +1310,12 @@ object AnalyticsQueries {
     Artifacts.drain("stream_funnel", dir, OutputMode.Update) { src =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t_us"))
-      val topic = new OrderedTopic(src)
+      val topic = JsonTopic(src)
       val hi = topic.appendTimeSlices(ev)
       // watermark sentinel (the t24 discipline): flush the sub-ms tail
       // the ms-granularity watermark can never pass; filtered on read
-      topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
-        .toDF("user_id", "event_type", "t_us"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, t_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = topic.append(s.createDataFrame(Seq((-1L, "x", hi + 86400000000L)))
+        .toDF("user_id", "event_type", "t_us")).stream()
       // idle-TTL sized past the fixture topic's span (the batch oracle
       // analyzes the whole topic as one funnel window, so the retention
       // horizon must cover it): state bounded by contract, nothing

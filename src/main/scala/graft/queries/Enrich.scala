@@ -50,12 +50,15 @@ object Enrich {
     * parquet: written on the first call per `events` leaf listing (path,
     * length, mtime), so a rewritten `events.parquet` lands again. The
     * write keeps the scan's own partitioning, one file per input split. */
-  def landedPath(spark: SparkSession, dir: String): String = {
-    val events = s"$dir/events.parquet"
-    Artifacts.land("security_events", dir, Tables.listing(spark, events).getOrElse(Nil)) {
+  def landedPath(spark: SparkSession, dir: String): String =
+    Artifacts.land("security_events", dir, eventsInput(spark, dir)) {
       out => securityEvents(Tables.events(spark, dir)).write.mode("overwrite").parquet(out)
     }
-  }
+
+  /** The `events` leaf listing of fixture `dir`: the input fingerprint of
+    * every artifact derived from the security events. */
+  private[queries] def eventsInput(spark: SparkSession, dir: String): Artifacts.Input =
+    Tables.listing(spark, s"$dir/events.parquet").getOrElse(Nil)
 
   /** Spark-side derivation, run by [[landedPath]] (and from raw rows by
     * the ladder stress). Keep in lock-step with [[sqlCte]]. */

@@ -7,6 +7,7 @@ import graft.functions.{Net, TimeFns}
 import graft.io.Artifacts
 import graft.ops.{Lookups, Normalize, RangeJoin, Rollup}
 import graft.sources.Tables
+import graft.streaming.JsonTopic
 
 /** The AQL-layer operator corpus (SURVEY §2.2/§2.3/§2.4/§2.5) executed
   * natively over the `events` table, each with a DuckDB oracle.
@@ -257,15 +258,7 @@ object EventQueries {
   private def streamedHourly(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_parity", dir, OutputMode.Update,
         withBatchId = true) { _ =>
-      // streaming sources need a pinned schema; the table catalog serves
-      // it (S4's schema-union inference, never first-row)
-      Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = Tables.schema(s, dir, "events")
-      // the file source wants a directory; glob-filter it to the events table
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = Tables.normalizeTs(stream) // fixture dtype dispatch, as Tables.events
-      graft.streaming.StreamingRollup.hourly(ev, "ts", "value",
+      graft.streaming.StreamingRollup.hourly(Tables.eventsStream(s, dir), "ts", "value",
         dims = Seq("event_type"), lateness = "87600 hours", sumColName = "sum_value")
     })
 
@@ -294,11 +287,7 @@ object EventQueries {
     */
   private def streamedDedup(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_dedup", dir, OutputMode.Append) { _ =>
-      Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = Tables.schema(s, dir, "events")
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = Tables.normalizeTs(stream)
+      val ev = Tables.eventsStream(s, dir)
         .withColumn("content",
           concat(col("event_type"), lit("#"), (col("event_id") % 997).cast("string")))
       graft.streaming.StreamingDedup.exact(ev, "ts", "content",
@@ -371,11 +360,8 @@ object EventQueries {
     */
   private def streamedIntervalJoin(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_join", dir, OutputMode.Append) { _ =>
-      Tables.ensureNanosConf(s)
-      val rawSchema = Tables.schema(s, dir, "events")
       def side(eventType: String, key: String, ts: String) =
-        Tables.normalizeTs(s.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir))
+        Tables.eventsStream(s, dir)
           .filter(col("event_type") === eventType)
           .select(col("user_id").as(key), col("ts").as(ts))
       graft.streaming.StreamingJoins.intervalJoin(
@@ -387,7 +373,7 @@ object EventQueries {
   /** KAFKA-SHAPE DECODE PARITY — the topic round-trip without a broker:
     * events serialized to one JSON payload per record (`to_json`, exactly
     * the producer's wire shaping — reference: mykafka/producer.py:7-20),
-    * landed as a text "topic", streamed back through
+    * landed as a [[JsonTopic]], streamed back through
     * [[graft.streaming.KafkaSource.decodeJson]] (the same decode the
     * kafka wiring uses), and appended to parquet. Double values
     * round-trip exactly (shortest-repr JSON formatting), so the decoded
@@ -395,18 +381,13 @@ object EventQueries {
     */
   private def streamedJsonDecode(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.drain("stream_json", dir, OutputMode.Append) { src =>
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_id"), col("user_id"),
-          col("event_type"), col("value"))).as("value"))
-        .write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-      graft.streaming.KafkaSource.decodeJson(s.readStream.text(src), schema)
+      JsonTopic(src).write(Tables.events(s, dir)
+        .select("event_id", "user_id", "event_type", "value")).stream()
     })
 
   /** HLL registers computed BY THE STREAMING PATH: JSON topic -> decode ->
     * streaming `groupBy(event_type, reg_idx).agg(max(rho))` in Update mode,
-    * drained AvailableNow over a multi-file backlog (maxFilesPerTrigger=1
+    * drained AvailableNow over a multi-file backlog (one file per batch
     * forces cross-batch merging). rho per group is MONOTONE non-decreasing
     * across batches, so the read-side compaction of Update-mode re-emissions
     * is a plain `max` — the sketch's mergeability is exactly what makes the
@@ -416,13 +397,8 @@ object EventQueries {
   private def streamedHllRegisters(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_hll", dir, OutputMode.Update) { src =>
       import graft.functions.{Hashing, Hll}
-      Tables.events(s, dir)
-        .select(to_json(struct(col("user_id"), col("event_type"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src)
+        .write(Tables.events(s, dir).select("user_id", "event_type")).stream()
       val h = Hashing.md5Long(col("user_id").cast("string"))
       decoded
         .groupBy(col("event_type"), Hll.regIdx(h).as("reg_idx"))
@@ -445,14 +421,7 @@ object EventQueries {
       import graft.functions.Histogram
       val r = Tables.events(s, dir).agg(min(col("value")), max(col("value"))).head()
       val (lo, hi) = (r.getDouble(0), r.getDouble(1))
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_type"), col("value"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, value DOUBLE")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.events(s, dir).select("event_type", "value")).stream()
         .groupBy(col("event_type"), Histogram.bin(col("value"), lo, hi, 256).as("bin"))
         .agg(count(lit(1)).as("cnt"))
     }

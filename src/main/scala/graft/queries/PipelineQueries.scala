@@ -7,6 +7,7 @@ import graft.functions.Hashing
 import graft.io.Artifacts
 import graft.ops.{CacheRegistry, Dedup, IncrementalIndex, Packing, Sampling, Similarity, TextAnalysis => TA}
 import graft.sources.Tables
+import graft.streaming.JsonTopic
 
 /** Training-data pipeline operators, batch 2: PII scrubbing, repetition
   * quality signals, rule-cascade curation, deterministic splits/sampling,
@@ -1711,13 +1712,8 @@ object PipelineQueries {
   private def streamedCountMinRegs(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing
     val out = Artifacts.drain("stream_cms", dir, OutputMode.Update) { src =>
-      Tables.documents(s, dir)
-        .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src)
+        .write(Tables.documents(s, dir).select("doc_id", "text")).stream()
       // seed fan-out is a CONSTANT-array explode; the seeded md5 runs in
       // the codegen'd Project ABOVE the Generate. Folding the md5 into
       // the generator (explode over computed structs) evaluates it
@@ -1740,13 +1736,8 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
       val bench = Dedup.shingles(docs.filter(col("source") === "src0"),
         "doc_id", "text", n = 5).select("shingle").distinct()
-      docs.filter(col("source") =!= "src0")
-        .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src)
+        .write(docs.filter(col("source") =!= "src0").select("doc_id", "text")).stream()
       Dedup.shingles(decoded, "doc_id", "text", n = 5)
         .join(broadcast(bench), Seq("shingle"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
@@ -1763,12 +1754,7 @@ object PipelineQueries {
     val out = Artifacts.drain("stream_ivf", dir, OutputMode.Update) { src =>
       val em = Tables.embeddings(s, dir)
       val cents = Similarity.kmeansTrain(em, "vec_id", "embedding", k = 8, iters = 2)
-      em.select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(em.select("vec_id", "embedding")).stream()
       // same output shape as q_emb_kmeans: every measure (count, id
       // checksum, inertia) is a monotone non-negative accumulator, so the
       // read-side max compaction is exact
@@ -1816,13 +1802,8 @@ object PipelineQueries {
         .withColumn("ni", sq(col("q")))
         .filter(col("ni") > 0L)
         .select(col("id").as("i"), col("q").as("qi"), col("ni"), col("cell"))
-      em.filter(col("vec_id") >= SemStreamCut)
-        .select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(
+        em.filter(col("vec_id") >= SemStreamCut).select("vec_id", "embedding")).stream()
       val arrivals = Similarity
         .assignWithCentroidsTopP(decoded, "vec_id", "embedding", cents.toSeq, 1)
         .withColumn("nj", sq(col("q")))
@@ -1882,13 +1863,8 @@ object PipelineQueries {
             col("nrm").as("ni")))
       corpusIdx.count() // materialize before releasing the assign rows
       CacheRegistry.release(corpusAss)
-      em.filter(col("vec_id") >= SemStreamCut)
-        .select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(
+        em.filter(col("vec_id") >= SemStreamCut).select("vec_id", "embedding")).stream()
       val arrivals = Similarity.hierServeTagged(
           Similarity.probeAssign(decoded, "vec_id", "embedding",
             coarse.toSeq, 2), fineMap, 2)
@@ -1928,14 +1904,8 @@ object PipelineQueries {
   private def streamedHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.MisraGries
     val out = Artifacts.drain("stream_mg", dir, OutputMode.Update) { src =>
-      Tables.documents(s, dir)
-        .select(to_json(struct(col("doc_id"), col("lang"), col("text"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, lang STRING, text STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.documents(s, dir).select("doc_id", "lang", "text"))
+        .stream()
         .select(col("lang"), explode(TA.tokens(col("text"))).as("token"))
         .groupBy("lang")
         .agg(MisraGries.candidates(col("token"), HeavyHitterCap).as("cands"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.io.Artifacts
 import graft.ops.{Profiling, TextAnalysis => TA}
 import graft.sources.Tables
+import graft.streaming.JsonTopic
 
 /** Data-quality surface: dataset profiling, declarative constraint
   * validation, and distribution-drift monitoring (`ops/Profiling`).
@@ -503,16 +504,8 @@ object QualityQueries {
     */
   private def streamedOrderCheckSums(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_validate", dir, OutputMode.Update) { src =>
-      Tables.orders(s, dir)
-        .select(to_json(struct(col("o_orderkey"), col("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderpriority"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
-          "o_totalprice DOUBLE, o_orderpriority STRING")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(Tables.orders(s, dir).select("o_orderkey",
+        "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")).stream()
       decoded.agg(count(lit(1)).as("t"),
         sum(when(col("o_custkey").isNotNull, 1L).otherwise(0L)).as("g0"),
         sum(when(col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L)).as("g1"),
@@ -531,15 +524,9 @@ object QualityQueries {
     */
   private def streamedDailyCounts(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_anomaly", dir, OutputMode.Update) { src =>
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, ts_us BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.events(s, dir)
+          .select(col("event_id"), unix_micros(col("ts")).as("ts_us")))
+        .stream()
         .select(expr("ts_us div 86400000000").as("day"))
         .groupBy("day").agg(count(lit(1)).as("n"))
     }
@@ -569,17 +556,10 @@ object QualityQueries {
   private def streamedManifest(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_manifest", dir, OutputMode.Update,
         withBatchId = true) { src =>
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, ts_us BIGINT, user_id BIGINT, " +
-          "event_type STRING, cents BIGINT")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
+      val decoded = JsonTopic(src).write(Tables.events(s, dir)
+        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
+          col("event_type"), round(col("value") * 100).cast("long").as("cents")))
+        .stream()
       val rowRepr = concat_ws("|", col("event_id"), col("ts_us"),
         col("user_id"), col("event_type"), col("cents"))
       decoded
@@ -684,15 +664,10 @@ object QualityQueries {
   private def streamedDriftBins(s: SparkSession, dir: String): DataFrame = {
     val out = Artifacts.drain("stream_drift", dir, OutputMode.Update) { src =>
       val (mid, minv, maxv) = driftParams(s, dir)
-      Tables.normalizeTs(Tables.orders(s, dir), "o_orderdate")
-        .filter(unix_micros(col("o_orderdate")) >= mid)
-        .select(to_json(struct(col("o_orderkey"), col("o_totalprice"))).as("value"))
-        .repartition(4).write.text(src)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "o_orderkey BIGINT, o_totalprice DOUBLE")
-      val decoded = graft.streaming.KafkaSource.decodeJson(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src), schema)
-      decoded
+      JsonTopic(src).write(Tables.normalizeTs(Tables.orders(s, dir), "o_orderdate")
+          .filter(unix_micros(col("o_orderdate")) >= mid)
+          .select("o_orderkey", "o_totalprice"))
+        .stream()
         .select(binCol(col("o_totalprice"), minv, maxv).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("cb"))
     }

@@ -87,10 +87,11 @@ object ViewQueries {
         dims = Seq("domain_id", "dest_geo"),
         hourColName = "hour", sumColName = "sum_event_count")))
 
-  /** The materialized store, one per sfDir, written on first access in
-    * this JVM. */
+  /** The materialized store, written on first access per `events` leaf
+    * listing in this JVM (the security-event landing's key), so a
+    * rewritten `events.parquet` is materialized again. */
   private def store(s: SparkSession, dir: String): String =
-    graft.io.Artifacts.land("views", dir) { root =>
+    graft.io.Artifacts.land("views", dir, Enrich.eventsInput(s, dir)) { root =>
       val ev = Enrich.landed(s, dir)
       definitions.foreach { case (name, build) =>
         Rollup.writePartitionedByDay(build(ev), "hour", s"$root/$name")

@@ -138,6 +138,15 @@ object Tables {
     ensureNanosConf(spark)
     normalizeTs(read(spark, dir, "events"))
   }
+
+  /** [[events]] as a file-source stream: the catalog's schema pinned on
+    * the reader (a stream cannot infer one), the directory glob-filtered
+    * to the events table, `ts` normalized the same way. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    ensureNanosConf(spark)
+    normalizeTs(spark.readStream.schema(schema(spark, dir, "events"))
+      .option("pathGlobFilter", "events.parquet").parquet(dir))
+  }
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "customer")

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.StructType
   * a MemoryStream in tests, or a batch DataFrame — KafkaSourceSpec proves
   * decode+rollup parity without a broker (none exists in this container;
   * the `spark-sql-kafka-0-10` connector jar is a deploy-time dependency of
-  * [[kafkaJsonStream]] only).
+  * [[kafkaJsonStream]] only). The broker-free topic the streaming-parity
+  * drains read is [[JsonTopic]]: JSON-lines files replayed through this
+  * decode.
   */
 object KafkaSource {
 

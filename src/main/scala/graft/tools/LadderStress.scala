@@ -27,7 +27,7 @@ object LadderStress {
         raw0.withColumn("ts", expr(s"timestampadd(MONTH, ${5 * i}, ts)")))
       val store = shifted.reduce(_ union _)
       val base = java.nio.file.Files
-        .createTempDirectory(s"graft_ladderstress_${span}_").toString
+        .createTempDirectory(graft.io.Artifacts.root, s"graft_ladderstress_${span}_").toString
       val L = Rollup.StatsLadder(base, "ts", "value", Seq("event_type"),
         kmvOf = Some((kmvIn, 32)))
       val t0 = System.nanoTime()

@@ -26,7 +26,8 @@ object VecStress {
     val spark = graft.GraftSession.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val out = java.nio.file.Files.createTempDirectory("graft_vecstress_").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(graft.io.Artifacts.root, "graft_vecstress_").toString
     val em = Tables.embeddings(spark, sfDir)
     val maxVec = em.agg(max("vec_id")).head().getLong(0) + 1
     val reps = spark.range(replicas.toLong).select(col("id").as("rep"))

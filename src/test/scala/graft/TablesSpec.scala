@@ -12,7 +12,7 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.LongType
@@ -197,15 +197,25 @@ class TablesSpec extends SparkSpec {
     withTempDir("graft_landing_") { d =>
       val dir = d.toString
       copyEvents(d)
+      // the CREEvents view's event total and the same total over the landed rows
+      def viewTotal = ViewQueries.globalView(spark, dir, "CREEvents")
+        .agg(sum("sum_event_count")).head().getLong(0)
+      def landedTotal = Enrich.landed(spark, dir).filter(col("event_type") === "click")
+        .agg(sum("event_count")).head().getLong(0)
       val raw = spark.read.parquet(s"$sf/events.parquet")
       val first = Enrich.landedPath(spark, dir)
       assert(Enrich.landed(spark, dir).count() === raw.count())
+      val fullTotal = viewTotal
+      assert(fullTotal === landedTotal)
       val fewer = raw.filter(col("event_id") % 3 === 0)
       fewer.write.mode("overwrite").parquet(s"$dir/events.parquet")
       val second = Enrich.landedPath(spark, dir)
       assert(second !== first)
       assert(Enrich.landed(spark, dir).count() === fewer.count())
       assert(fewer.count() < raw.count())
+      // the views follow the rewrite too
+      assert(viewTotal === landedTotal)
+      assert(viewTotal < fullTotal)
     }
   }
 
